@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -13,7 +14,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
+    // failed query -> (exception class, first message line) of its first
+    // failure; the keys are the `errors` list
+    val errors = scala.collection.mutable.TreeMap[String, (String, String)]()
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       // noop sink: forces full evaluation of every output column (a bare
@@ -22,7 +25,11 @@ object Bench {
       // in milliseconds and would otherwise read as a bench speedup.
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => errors += name }
+      catch { case NonFatal(e) =>
+        val firstLine = Option(e.getMessage)
+          .flatMap(_.linesIterator.nextOption()).getOrElse("")
+        errors.getOrElseUpdate(name, (e.getClass.getName, firstLine))
+      }
       val sec = (System.nanoTime() - t0) / 1e9
       // Free this query's localCheckpoint blocks before the next query:
       // 166 queries share one block manager, and accumulated
@@ -76,7 +83,11 @@ object Bench {
       .mkString("{", ",", "}")
     val qmins = names.map(n => s"\"" + n + "\":" + samples(n).min)
       .mkString("{", ",", "}")
-    val errs = errors.distinct.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val errs = errors.keys.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val errDetail = errors.map { case (n, (cls, msg)) =>
+      s"\"$n\":{\"class\":${Verify.jsonString(cls)}," +
+        s"\"message\":${Verify.jsonString(msg)}}"
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // min-pass total beside the median total: a mid-suite host stall
     // inflates 2-of-3 medians of whichever queries it straddles but
@@ -84,7 +95,7 @@ object Bench {
     // code-vs-code headline (the r12 driver capture burned adjudication
     // on exactly this — 17.26 s median / 2.74 s min on untouched code)
     val totalMin = names.map(n => samples(n).min).sum
-    val full = s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","passes":$passes,"warmup_sec":$warmupSec,"errors":$errs,"queries":$qs,"queries_min":$qmins,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","passes":$passes,"warmup_sec":$warmupSec,"errors":$errs,"errors_detail":$errDetail,"queries":$qs,"queries_min":$qmins,"sf":"$sfDir"}"""
     // The full per-query map (~6 KB for 166 queries) goes to a known file:
     // a consumer that captures only the TAIL of stdout truncates the long
     // line mid-JSON (both prior rounds' bench records show `parsed: null`

@@ -1,26 +1,49 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import scala.collection.immutable.ListMap
 
 /** Harness parquet corpus loader (TESTDATA.md). */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** The declared schema of every corpus table, in load order. Each is
+    * exactly what Spark infers from the table's parquet footer (TablesSpec
+    * pins this at every scale factor), so a load needs no footer-reading
+    * inference job. The timestamp columns are stored as INT64
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+    * TIMESTAMP_NTZ.
+    */
+  private val schemas: ListMap[String, StructType] = ListMap(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" ->
+      "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, " +
+      "source STRING, n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // The events table stores TIMESTAMP(NANOS), which Spark 4 refuses by
-    // default; surface it as epoch-nanos LongType instead (Events.* handles
-    // both representations with exact integer math). The conf is
-    // session-global and stays set after the first events load — benign
-    // for every other table here (µs-timestamp or timestamp-free schemas
-    // are unaffected by nanosAsLong), but callers mixing in external
-    // TIMESTAMP(NANOS) parquet should be aware their nanos columns will
-    // surface as LongType too.
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
-  }
+  val names: Seq[String] = schemas.keys.toSeq
+
+  private def schema(name: String): StructType = schemas.getOrElse(name,
+    throw new IllegalArgumentException(
+      s"unknown table '$name'; known tables: ${names.mkString(", ")}"))
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.schema(schema(name)).parquet(s"$sfDir/$name.parquet")
 
   /** Spread a COMPUTE-DENSE pipeline input across the session's cores.
     *

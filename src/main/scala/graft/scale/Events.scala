@@ -8,13 +8,14 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** Event-time operators over the `events` table: tumbling windows,
   * gap-based sessionization, JSON property extraction.
   *
-  * The harness parquet stores `ts` as TIMESTAMP(NANOS), which Spark 4 refuses
-  * to read as a timestamp (PARQUET_TYPE_ILLEGAL); with
-  * `spark.sql.legacy.parquet.nanosAsLong=true` it surfaces as epoch-nanos
-  * LongType. All operators here therefore work on exact integer epoch math
-  * (`DIV` — never double division, which loses precision above 2^53), and
-  * emit epoch seconds (bigint): deterministic, and representation-agnostic
-  * across Spark (µs) and DuckDB (ns).
+  * The harness parquet stores `ts` as INT64 TIMESTAMP(MICROS,
+  * isAdjustedToUTC=false), which `Tables.load` declares as TIMESTAMP_NTZ.
+  * The operators take any DataFrame, so they also accept `ts` as
+  * epoch-nanos LongType (how Spark surfaces TIMESTAMP(NANOS) parquet under
+  * `spark.sql.legacy.parquet.nanosAsLong=true`). All operators work on exact
+  * integer epoch math (`DIV` — never double division, which loses precision
+  * above 2^53), and emit epoch seconds (bigint): deterministic, and
+  * representation-agnostic across Spark (µs) and DuckDB (ns).
   */
 object Events {
 

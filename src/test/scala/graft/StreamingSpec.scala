@@ -148,7 +148,7 @@ class StreamingSpec extends SparkSpec {
   test("file-stream over the real events table matches batch hourly counts") {
     import graft.io.Tables
     import graft.scale.Events
-    val batch = Tables.load(spark, sf, "events")   // sets nanosAsLong conf
+    val batch = Tables.load(spark, sf, "events")   // ts is TIMESTAMP_NTZ
     // file streams need a DIRECTORY source; stage the single parquet file
     val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
     java.nio.file.Files.copy(
