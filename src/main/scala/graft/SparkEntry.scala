@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.io.{Readers, Tables}
 import graft.metrics.Metrics
@@ -10,6 +11,7 @@ import graft.plans.{Joins, SerializeResplitRule}
 import graft.sample.Samplers
 import graft.scale.{Baskets, Dedup, Events, Geo, Graph, Multimodal, Similarity, TextAnalysis}
 import graft.serialize.Serialize
+import graft.streaming.Streams
 import graft.tasks.Wrangler
 import graft.transform.TransformProgram
 
@@ -1655,26 +1657,18 @@ object SparkEntry {
         "doc_id", "tx")
         .orderBy(col("doc_id"), col("kind"), col("token"))),
 
-    // ---- streaming in the CHECKED surface: hourly agg via readStream -------
+    // ---- streaming in the CHECKED surface: hourly agg over a file stream ---
     // Structured Streaming over the events parquet (AvailableNow semantics
     // through processAllAvailable), Complete-mode memory sink; deterministic
     // columns only (streaming countDistinct is unsupported → omitted). Same
     // oracle math as hourly_agg_events.
     "streaming_hourly_agg_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      // glob, not the bare file path: FileStreamSource requires its
-      // basePath to be a directory
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val agg = stream
         .groupBy(Events.hourEpoch(stream).as("hour_epoch"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      val name = "stream_hourly_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, agg, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, agg, OutputMode.Complete())
         .orderBy(col("hour_epoch"), col("event_type"))
     }),
 
@@ -1688,9 +1682,7 @@ object SparkEntry {
     // time − 1 h (the trailing open windows are withheld by design; the
     // oracle applies the same integer cutoff).
     "streaming_hourly_append_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val agg = stream
         .withColumn("__ts", Events.tsAsTimestamp(stream))
         .withWatermark("__ts", "1 hour")
@@ -1700,10 +1692,7 @@ object SparkEntry {
             .as("sum_value"))
         .select(col("window.start").cast("long").as("hour_epoch"),
           col("event_type"), col("n_events"), col("sum_value"))
-      val name = "stream_happend_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams.runToMemory(s, agg, name,
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      Streams.runToMemory(s, agg, OutputMode.Append())
         .orderBy(col("hour_epoch"), col("event_type"))
     }),
 
@@ -1715,9 +1704,7 @@ object SparkEntry {
     // operator). Complete mode: every session emits, matching the batch
     // ground truth over the full fixture.
     "streaming_session_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val agg = stream
         .withColumn("__ts", Events.tsAsTimestamp(stream))
         .groupBy(session_window(col("__ts"), "30 minutes"), col("user_id"))
@@ -1728,11 +1715,7 @@ object SparkEntry {
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
           col("n_events"), col("sum_value"))
-      val name = "stream_session_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, agg, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, agg, OutputMode.Complete())
         .orderBy(col("user_id"), col("start_us"))
     }),
 
@@ -1742,9 +1725,7 @@ object SparkEntry {
     // passes its end = last event + gap; the trailing open sessions are
     // withheld by design and the oracle applies the same integer cutoff.
     "streaming_session_append_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val agg = stream
         .withColumn("__ts", Events.tsAsTimestamp(stream))
         .withWatermark("__ts", "1 hour")
@@ -1756,19 +1737,13 @@ object SparkEntry {
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
           col("n_events"), col("sum_value"))
-      val name = "stream_sessapp_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, agg, name,
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      Streams.runToMemory(s, agg, OutputMode.Append())
         .orderBy(col("user_id"), col("start_us"))
     }),
 
     // ---- streaming sliding windows in the CHECKED surface ------------------
     "streaming_sliding_agg_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val agg = stream
         .withColumn("__ts", Events.tsAsTimestamp(stream))
         .groupBy(window(col("__ts"), "1 hour", "30 minutes"), col("event_type"))
@@ -1776,11 +1751,7 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("win_start"),
           col("event_type"), col("n_events"), col("sum_value"))
-      val name = "stream_sliding_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, agg, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, agg, OutputMode.Complete())
         .orderBy(col("win_start"), col("event_type"))
     }),
 
@@ -2109,9 +2080,7 @@ object SparkEntry {
     // is what makes the result micro-batch-schedule-independent — the
     // oracle is the same window-over-distinct-hashes SQL as the batch query.
     "streaming_kmv_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val agg = udaf(graft.scale.Sketches.kmvAggregator(64),
         org.apache.spark.sql.Encoders.scalaLong)
       val sk = stream
@@ -2122,11 +2091,7 @@ object SparkEntry {
           col("__kmv.nSketch").cast("long").as("n_sketch"),
           col("__kmv.kth").as("kmv_kth"),
           col("__kmv.estimate").as("kmv_est"))
-      val name = "stream_kmv_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, sk, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, sk, OutputMode.Complete())
         .orderBy(col("event_type"))
     }),
 
@@ -2135,19 +2100,13 @@ object SparkEntry {
     // streaming Complete-mode state is the same 64-byte register table the
     // batch build produces — the oracle replays it verbatim.
     "streaming_hll_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val hashed = stream.withColumn("__h",
         graft.scale.HashExprs.md5PrefixLong(
           col("user_id").cast("string").cast("binary"), 15))
       val sk = graft.scale.Sketches.hllDistinct(
         hashed, Seq("event_type"), col("__h"))
-      val name = "stream_hll_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, sk, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, sk, OutputMode.Complete())
         .orderBy(col("event_type"))
     }),
 
@@ -2160,9 +2119,7 @@ object SparkEntry {
     // table after the stream drains. The oracle replays the identical
     // register table + rollup from the batch view of the same rows.
     "streaming_rolling_hll_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val ev = stream
         .withColumn("__es", graft.scale.Events.epochSeconds(stream))
         .withColumn("hour", expr("__es DIV 3600"))
@@ -2172,10 +2129,7 @@ object SparkEntry {
         .hllRegisterRows(ev, Seq("event_type"), col("hour"), col("__h"))
         .groupBy(col("event_type"), col("tb"), col("bucket"))
         .agg(max(col("rho")).as("rho"))
-      val name = "stream_rhll_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val state = graft.streaming.Streams.runToMemory(s, regs, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val state = Streams.runToMemory(s, regs, OutputMode.Complete())
       graft.scale.Sketches.hllRollupWindows(state, Seq("event_type"), 4)
         .withColumnRenamed("tb", "hour")
         .orderBy(col("event_type"), col("hour"))
@@ -2188,15 +2142,9 @@ object SparkEntry {
     // memory heavy-hitter tracking. Counter addition is merge-order-free,
     // so the batch sketch-table oracle replays the result exactly.
     "streaming_cms_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val sk = graft.scale.Sketches.cmsBuild(stream, col("user_id"))
-      val name = "stream_cms_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, sk, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, sk, OutputMode.Complete())
         .orderBy(col("j"), col("bucket"))
     }),
 
@@ -2238,14 +2186,9 @@ object SparkEntry {
     // ---- STREAMING daily-trend twin (per-(type, day) cent totals as
     // Complete-mode state; the regression fold replays on drain) ------------
     "streaming_trend_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val daily = Events.trendDaily(stream)
-      val name = "stream_trend_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, daily, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, daily, OutputMode.Complete())
       Events.trendFromDaily(drained).orderBy(col("event_type"))
     }),
 
@@ -2260,14 +2203,9 @@ object SparkEntry {
     // ---- STREAMING ACF (the SAME per-(type, day) state as the trend and
     // CUSUM twins — one more fold over already-proven state) ----------------
     "streaming_acf_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val daily = Events.trendDaily(stream)
-      val name = "stream_acf_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, daily, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, daily, OutputMode.Complete())
       Events.acfFromDaily(drained, 7)
         .orderBy(col("event_type"), col("lag"))
     }),
@@ -2284,15 +2222,10 @@ object SparkEntry {
     // k-anonymity state relation; the histogram/gini fold replays on
     // drain) — watch the hot key grow as ingest accumulates ------------------
     "streaming_skew_profile_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val cls = graft.metrics.Metrics.kAnonymityCounts(stream,
         Seq("user_id"))
-      val name = "stream_skew_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, cls, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, cls, OutputMode.Complete())
       graft.metrics.Metrics.skewFromSizes(drained, 32)
     }),
 
@@ -2310,18 +2243,13 @@ object SparkEntry {
 
     // ---- STREAMING l-diversity ((class, sensitive) cell state) -------------
     "streaming_l_diversity_customer" -> ((s, dir) => {
-      val batch = t(s, dir, "customer")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/customer*.parquet")
+      val stream = Tables.stream(s, dir, "customer")
         .withColumn("bal_band",
           expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
             " div 100000"))
       val counts = graft.metrics.Metrics.lDiversityCounts(stream,
         Seq("c_nationkey", "c_mktsegment"), "bal_band")
-      val name = "stream_ldiv_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.lDiversityFromCounts(drained, Seq(2, 3, 5))
         .orderBy(col("l"))
     }),
@@ -2343,18 +2271,13 @@ object SparkEntry {
 
     // ---- STREAMING t-closeness ((class, ordered sensitive) cell state) -----
     "streaming_t_closeness_customer" -> ((s, dir) => {
-      val batch = t(s, dir, "customer")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/customer*.parquet")
+      val stream = Tables.stream(s, dir, "customer")
         .withColumn("bal_band",
           expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
             " div 100000"))
       val counts = graft.metrics.Metrics.tClosenessCounts(stream,
         Seq("c_nationkey", "c_mktsegment"), "bal_band")
-      val name = "stream_tclose_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.tClosenessFromCounts(drained,
           Seq(150000L, 250000L, 500000L))
         .orderBy(col("t"))
@@ -2362,23 +2285,16 @@ object SparkEntry {
 
     // ---- STREAMING seasonality index ((type, hour) count state) -------------
     "streaming_seasonality_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val hourly = Events.hourlyCounts(stream)
-      val name = "stream_season_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, hourly, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, hourly, OutputMode.Complete())
       Events.seasonalityFromHourly(drained)
         .orderBy(col("event_type"), col("hour"))
     }),
 
     // ---- STREAMING WOE/IV panel (bin-count state) ---------------------------
     "streaming_woe_iv_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
         .withColumn("label",
           col("event_type") === "purchase" && col("value") >= 150.0)
         .withColumn("bin",
@@ -2386,27 +2302,19 @@ object SparkEntry {
             " div 5000"))
       val counts = graft.metrics.Metrics.woeBinCounts(stream, "label",
         "bin")
-      val name = "stream_woe_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.woeFromCounts(drained).orderBy(col("bin"))
     }),
 
     // ---- STREAMING Pearson panel (exact decimal-moment state) ---------------
     "streaming_corr_matrix_lineitem" -> ((s, dir) => {
-      val batch = t(s, dir, "lineitem")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      val stream = Tables.stream(s, dir, "lineitem")
       val moments = graft.metrics.Metrics.corrMoments(stream, Seq(
         ("qty_price", "l_quantity", "l_extendedprice"),
         ("qty_discount", "l_quantity", "l_discount"),
         ("price_tax", "l_extendedprice", "l_tax"),
         ("discount_tax", "l_discount", "l_tax")))
-      val name = "stream_corr_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       graft.metrics.Metrics.corrFromMoments(drained).orderBy(col("pair"))
     }),
 
@@ -2523,14 +2431,9 @@ object SparkEntry {
     // (user, type) count state (the k-anonymity class-size precedent);
     // the entropy fold replays on drain — shares the batch oracle.
     "streaming_user_entropy_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = Events.userTypeCounts(stream)
-      val name = "stream_uent_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Events.entropyFromCounts(drained).orderBy(col("user_id"))
     }),
 
@@ -2548,14 +2451,9 @@ object SparkEntry {
     // ---- STREAMING CUSUM changepoint monitor (same daily-total state as
     // the trend twin; the peak-pick fold replays on drain) -------------------
     "streaming_cusum_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val daily = Events.trendDaily(stream)
-      val name = "stream_cusum_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, daily, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, daily, OutputMode.Complete())
       Events.cusumFromDaily(drained).orderBy(col("event_type"))
     }),
 
@@ -3250,15 +3148,10 @@ object SparkEntry {
     // the quantized fold runs over the drained table, batch oracle
     // verbatim.
     "streaming_js_divergence_docs" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/documents*.parquet")
+      val stream = Tables.stream(s, dir, "documents")
       val counts = TextAnalysis.jsDivergenceCounts(
         stream, "text", col("lang") === "en")
-      val name = "stream_jsd_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       TextAnalysis.jsDivergenceFromCounts(drained)
     }),
 
@@ -3518,11 +3411,9 @@ object SparkEntry {
 
     // ---- stream-stream interval join in the CHECKED surface ----------------
     "streaming_join_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
       // ONE file-stream source, both join sides derived from it (stream
-      // self-join): halves the source listing/scan work vs two readStreams
-      val st = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      // self-join): halves the source listing/scan work vs two sources
+      val st = Tables.stream(s, dir, "events")
       def side(etype: String, userAs: String, tsAs: String) =
         st.filter(col("event_type") === etype)
           .withColumn(tsAs, Events.tsAsTimestamp(st))
@@ -3533,23 +3424,7 @@ object SparkEntry {
       val joined = purchases.join(clicks,
         expr("c_user = p_user AND " +
           "c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
-      val name = "stream_join_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      // stream-stream join state cost is per (partition × 4 state stores):
-      // at this corpus size the commit/snapshot overhead of 32 partitions
-      // dwarfs the work — run the stateful query on fewer partitions
-      // (result-invariant: everything downstream re-aggregates), restoring
-      // the session setting afterwards
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val collected =
-        try {
-          // never RAISE the session's partition count (small test/verify
-          // sessions run at 4) — only cap the bench's 32
-          s.conf.set("spark.sql.shuffle.partitions",
-            math.min(prev.toInt, 8).toString)
-          graft.streaming.Streams.runToMemory(s, joined, name)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      collected
+      Streams.runToMemory(s, joined)
         .withColumn("day", expr("CAST(p_ts AS LONG) DIV 86400"))
         .groupBy(col("day"))
         .agg(count(lit(1)).as("n_pairs"),
@@ -3566,8 +3441,7 @@ object SparkEntry {
     // bucketed table the join prunes against instead.
     "streaming_corpus_dedup_docs" -> ((s, dir) => {
       val batch = t(s, dir, "documents")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/documents*.parquet")
+      val stream = Tables.stream(s, dir, "documents")
       val key = TextAnalysis.minShingleFingerprint(col("text"), 3)
       val corpusKeys = batch.filter(col("doc_id") % 10 < 8)
         .select(key.as("fp")).distinct()
@@ -3575,28 +3449,18 @@ object SparkEntry {
         .select(col("source"), key.as("fp"))
         .join(corpusKeys, Seq("fp"), "left_anti")
         .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
-      val name = "stream_corpus_dedup_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, kept, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, kept, OutputMode.Complete())
         .orderBy(col("source"))
     }),
 
     "streaming_dedup_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val deduped = stream
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_distinct_users"))
-      val name = "stream_dedup_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, deduped, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, deduped, OutputMode.Complete())
         .orderBy(col("event_type"))
     }),
 
@@ -4270,9 +4134,7 @@ object SparkEntry {
     // then a streaming aggregation. Batch-equivalent oracle: the same
     // join+agg over the full table.
     "streaming_enrich_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val dim = broadcast(t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
       val enriched = stream
@@ -4281,11 +4143,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
-      val name = "stream_enrich_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams
-        .runToMemory(s, enriched, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(s, enriched, OutputMode.Complete())
         .orderBy(col("c_mktsegment"), col("event_type"))
     }),
 
@@ -4313,17 +4171,12 @@ object SparkEntry {
     // union of key-serialized projections; the per-lhs fold runs over
     // the drained state. Oracle = the batch fd_violations SQL verbatim.
     "streaming_fd_violations_orders" -> ((s, dir) => {
-      val batch = t(s, dir, "orders")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/orders*.parquet")
+      val stream = Tables.stream(s, dir, "orders")
       val counts = graft.metrics.Metrics.fdCounts(stream, Seq(
         ("custkey->priority", Seq("o_custkey"), "o_orderpriority"),
         ("orderdate->status", Seq("o_orderdate"), "o_orderstatus"),
         ("priority->status", Seq("o_orderpriority"), "o_orderstatus")))
-      val name = "stream_fd_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.fdFromCounts(drained).orderBy(col("fd"))
     }),
 
@@ -4334,18 +4187,13 @@ object SparkEntry {
     // aggregation; the panel fold (totals, digit scaffold, chi-square)
     // runs over the drained state. Oracle = the batch SQL verbatim.
     "streaming_benford_orders" -> ((s, dir) => {
-      val batch = t(s, dir, "orders")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/orders*.parquet")
+      val stream = Tables.stream(s, dir, "orders")
         .select(col("o_custkey"),
           (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
             .as("price_cents"))
       val counts = graft.metrics.Metrics.benfordCounts(stream,
         Seq("o_custkey", "price_cents"))
-      val name = "stream_benford_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.benfordFromCounts(drained)
         .orderBy(col("column"), col("digit"))
     }),
@@ -4369,18 +4217,13 @@ object SparkEntry {
     // oracle verbatim. NULLs are filtered BEFORE the state agg (the batch
     // operator's non-null contract).
     "streaming_mad_outliers_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
         .withColumn("cents",
           (col("value").cast("decimal(18,2)") * 100).cast("long"))
         .filter(col("cents").isNotNull)
       val counts = graft.metrics.Metrics.valueCounts(stream, "cents",
         Seq("event_type"))
-      val name = "stream_mad_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.madFromCounts(drained, Seq("event_type"), 3)
         .orderBy(col("event_type"))
     }),
@@ -4394,40 +4237,35 @@ object SparkEntry {
     // piece's composition with the batch selection is spec-pinned.
     "streaming_mad_bounded_events" -> ((s, dir) => {
       import graft.metrics.Metrics
-      val batch = t(s, dir, "events")
-      def stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      def stream = Tables.stream(s, dir, "events")
         .withColumn("cents",
           (col("value").cast("decimal(18,2)") * 100).cast("long"))
         .filter(col("cents").isNotNull)
       val g = Seq("event_type")
-      def drain(df: DataFrame, p: String) =
-        graft.streaming.Streams.runToMemory(s, df,
-          p + java.util.UUID.randomUUID.toString.replace("-", ""),
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      def drain(df: DataFrame) =
+        Streams.runToMemory(s, df, OutputMode.Complete())
       // median: bucket-histogram state + narrowed value-count state
-      val hist1 = drain(Metrics.bucketCounts(stream, "cents", g, 12), "smb1_")
+      val hist1 = drain(Metrics.bucketCounts(stream, "cents", g, 12))
       val t1 = Metrics.percentileTargets(hist1, Seq(500000L), g)
         .localCheckpoint(true)
       val n1 = stream.withColumn("__b", shiftright(col("cents"), 12))
         .join(broadcast(t1.select(col("event_type"), col("__b")).distinct()),
           Seq("event_type", "__b"))
       val med = Metrics.percentilesFromNarrowedCounts(
-          drain(Metrics.valueCounts(n1, "cents", g), "smb2_"), t1, g, 12)
+          drain(Metrics.valueCounts(n1, "cents", g)), t1, g, 12)
         .select(col("event_type"), col("value").as("__med"))
         .localCheckpoint(true)
       // MAD: the same two bounded passes over |x − median|
       def devStream = stream.join(broadcast(med), g)
         .withColumn("__adv", abs(col("cents") - col("__med")))
-      val hist2 = drain(Metrics.bucketCounts(devStream, "__adv", g, 12),
-        "smb3_")
+      val hist2 = drain(Metrics.bucketCounts(devStream, "__adv", g, 12))
       val t2 = Metrics.percentileTargets(hist2, Seq(500000L), g)
         .localCheckpoint(true)
       val n2 = devStream.withColumn("__b", shiftright(col("__adv"), 12))
         .join(broadcast(t2.select(col("event_type"), col("__b")).distinct()),
           Seq("event_type", "__b"))
       val mad = Metrics.percentilesFromNarrowedCounts(
-          drain(Metrics.valueCounts(n2, "__adv", g), "smb4_"), t2, g, 12)
+          drain(Metrics.valueCounts(n2, "__adv", g)), t2, g, 12)
         .select(col("event_type"), col("value").as("__mad"))
         .localCheckpoint(true)
       // flags: ONE counter row per group as state
@@ -4438,7 +4276,7 @@ object SparkEntry {
           max(col("__med")).as("median"), max(col("__mad")).as("mad"),
           sum(when(abs(col("cents") - col("__med")) > col("__mad") * 3, 1L)
             .otherwise(0L)).as("n_outliers"))
-      drain(flags, "smb5_")
+      drain(flags)
         .withColumn("outlier_frac",
           round(col("n_outliers").cast("double") / col("n"), 6))
         .orderBy(col("event_type"))
@@ -4461,9 +4299,7 @@ object SparkEntry {
 
     // ---- STREAMING association panel (cell-count state, panel fold) --------
     "streaming_assoc_orders" -> ((s, dir) => {
-      val batch = t(s, dir, "orders")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/orders*.parquet")
+      val stream = Tables.stream(s, dir, "orders")
         .withColumn("mon", month(col("o_orderdate")))
         .withColumn("band",
           expr("cast(cast(o_totalprice as decimal(18,2)) * 100 as bigint)" +
@@ -4472,10 +4308,7 @@ object SparkEntry {
         Seq(("priority_month", "o_orderpriority", "mon"),
           ("status_band", "o_orderstatus", "band"),
           ("status_priority", "o_orderstatus", "o_orderpriority")))
-      val name = "stream_assoc_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.metrics.Metrics.assocFromCounts(drained).orderBy(col("pair"))
     }),
 
@@ -4541,15 +4374,10 @@ object SparkEntry {
     // ---- STREAMING Fleiss' kappa (rating-profile counts as Complete-mode
     // state — the kAnonymityCounts shape; the kappa fold replays on drain) ---
     "streaming_fleiss_kappa_docs" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/documents*.parquet")
+      val stream = Tables.stream(s, dir, "documents")
       val prof = Metrics.fleissProfileCounts(qualityRaters(stream),
         Seq("r_len", "r_tok", "r_div"))
-      val name = "stream_fleiss_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, prof, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, prof, OutputMode.Complete())
       Metrics.fleissFromProfiles(drained, 3)
     }),
 
@@ -4594,15 +4422,10 @@ object SparkEntry {
     // state; the MM fold replays on drain — fromPairs ∘ pairCounts is the
     // batch fit by construction, so the oracle is the batch SQL verbatim) --
     "streaming_bradley_terry_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = graft.scale.Preference.pairCounts(
         arenaMatches(stream), "pa", "pb", "oc")
-      val name = "stream_bt_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Preference.bradleyTerryFromPairs(drained, 3)
         .orderBy(col("strength_micro").desc, col("player"))
     }),
@@ -4631,15 +4454,10 @@ object SparkEntry {
     // dictionary is Complete-mode state; the walk runs over the drained
     // table and shares the batch oracle verbatim.
     "streaming_rank_centrality_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = graft.scale.Preference.pairCounts(
         arenaMatches(stream), "pa", "pb", "oc")
-      val name = "stream_rc_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Preference.rankCentralityFromPairs(drained, 3)
         .orderBy(col("pi_micro").desc, col("player"))
     }),
@@ -4654,15 +4472,10 @@ object SparkEntry {
 
     // ---- STREAMING Plackett-Luce (pattern dictionary as Complete state) ---
     "streaming_plackett_luce_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = graft.scale.Preference.raceCounts(
         arenaRaces(stream), "f", "s", "t3")
-      val name = "stream_pl_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Preference.plackettLuceFromCounts(drained, 3)
         .orderBy(col("strength_micro").desc, col("player"))
     }),
@@ -4686,15 +4499,10 @@ object SparkEntry {
 
     // ---- STREAMING Copeland (the SAME pair-count state, majority fold) ----
     "streaming_copeland_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = graft.scale.Preference.pairCounts(
         arenaMatches(stream), "pa", "pb", "oc")
-      val name = "stream_cope_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Preference.copelandFromPairs(drained)
         .orderBy(col("copeland").desc, col("player"))
     }),
@@ -4895,15 +4703,10 @@ object SparkEntry {
     // streaming aggregation state (one long per key in the state store),
     // the top-k + share read runs over the drained state table.
     "streaming_topk_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = stream.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"))
-      val name = "stream_topk_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val state = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val state = Streams.runToMemory(s, counts, OutputMode.Complete())
       val tot = state.agg(sum(col("n")).as("__tot"))
       graft.core.Bounded.withRank(
           state.crossJoin(broadcast(tot))
@@ -5031,17 +4834,12 @@ object SparkEntry {
     // counts only there. Exact, unbounded-domain safe — the state bound
     // is the batch operator's own, not a domain precondition.
     "streaming_percentiles_bounded_lineitem" -> ((s, dir) => {
-      val batch = t(s, dir, "lineitem")
-      def stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      def stream = Tables.stream(s, dir, "lineitem")
         .withColumn("cents",
           (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
       val qs = Seq(500000L, 900000L, 990000L)
       val b1 = Metrics.bucketCounts(stream, "cents", Seq("l_returnflag"), 12)
-      val n1 = "stream_pctb1_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val hist = graft.streaming.Streams.runToMemory(s, b1, n1,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val hist = Streams.runToMemory(s, b1, OutputMode.Complete())
       // |groups|·|quantiles| rows; referenced twice (bucket filter + pick)
       val targets = Metrics.percentileTargets(hist, qs, Seq("l_returnflag"))
         .localCheckpoint(true)
@@ -5050,10 +4848,7 @@ object SparkEntry {
         .withColumn("__b", shiftright(col("cents"), 12))
         .join(broadcast(tb), Seq("l_returnflag", "__b"))
       val v2 = Metrics.valueCounts(narrowed, "cents", Seq("l_returnflag"))
-      val n2 = "stream_pctb2_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val picks = graft.streaming.Streams.runToMemory(s, v2, n2,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val picks = Streams.runToMemory(s, v2, OutputMode.Complete())
       Metrics.percentilesFromNarrowedCounts(picks, targets,
           Seq("l_returnflag"), 12)
         .orderBy(col("l_returnflag"), col("q"))
@@ -5066,16 +4861,11 @@ object SparkEntry {
     // dictionary is itself dictionary-scale; the two-pass BOUNDED twin
     // above is the unbounded-domain deployment
     "streaming_percentiles_lineitem" -> ((s, dir) => {
-      val batch = t(s, dir, "lineitem")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      val stream = Tables.stream(s, dir, "lineitem")
         .withColumn("cents",
           (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
       val counts = Metrics.valueCounts(stream, "cents", Seq("l_returnflag"))
-      val name = "stream_pct_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.percentilesFromCounts(drained,
           Seq(500000L, 900000L, 990000L), Seq("l_returnflag"))
         .orderBy(col("l_returnflag"), col("q"))
@@ -5105,18 +4895,13 @@ object SparkEntry {
 
     // ---- STREAMING per-group KLL (per-group value-dictionary state) --------
     "streaming_kll_quantiles_by_flag_lineitem" -> ((s, dir) => {
-      val batch = t(s, dir, "lineitem")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      val stream = Tables.stream(s, dir, "lineitem")
         .withColumn("cents",
           (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
       val counts = stream
         .groupBy(col("l_returnflag"), col("cents").as("v"))
         .agg(count(lit(1)).as("c"))
-      val name = "stream_kllby_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Sketches.kllFromCountsBy(drained, Seq("l_returnflag"),
           1024, kllProbes)
         .orderBy(col("l_returnflag"), col("q_num"))
@@ -5128,17 +4913,12 @@ object SparkEntry {
     // fold on the drained dictionary (the streaming_percentiles shape;
     // same bounded-domain caveat, same batch oracle verbatim).
     "streaming_kll_quantiles_lineitem" -> ((s, dir) => {
-      val batch = t(s, dir, "lineitem")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      val stream = Tables.stream(s, dir, "lineitem")
         .withColumn("cents",
           (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
       val counts = stream.groupBy(col("cents").as("v"))
         .agg(count(lit(1)).as("c"))
-      val name = "stream_kll_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Sketches.kllFromCounts(drained, 1024, kllProbes)
         .orderBy(col("q_num"))
     }),
@@ -5176,9 +4956,7 @@ object SparkEntry {
     // runs as a second bounded pass (|groups|·|q| counter rows).
     "streaming_sample_quantiles_lineitem" -> ((s, dir) => {
       import graft.sample.Samplers
-      val batch = t(s, dir, "lineitem")
-      def stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      def stream = Tables.stream(s, dir, "lineitem")
         .withColumn("rid", concat(col("l_orderkey").cast("string"),
           lit("-"), col("l_linenumber").cast("string")))
         .withColumn("cents",
@@ -5186,10 +4964,8 @@ object SparkEntry {
         .filter(col("cents").isNotNull)
       val g = Seq("l_returnflag")
       val qs = Seq(250000L, 500000L, 900000L)
-      def drain(df: DataFrame, p: String) =
-        graft.streaming.Streams.runToMemory(s, df,
-          p + java.util.UUID.randomUUID.toString.replace("-", ""),
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      def drain(df: DataFrame) =
+        Streams.runToMemory(s, df, OutputMode.Complete())
       val bk = udaf(Samplers.bottomKSampleAggregator(1000),
         org.apache.spark.sql.Encoders.product[(Long, String, Long)])
       val sampled = stream
@@ -5197,7 +4973,7 @@ object SparkEntry {
           Samplers.hashDraw32(concat(lit("sq:"), col("rid"))))
         .groupBy(col("l_returnflag"))
         .agg(bk(col("__draw"), col("rid"), col("cents")).as("__s"))
-      val sample = drain(sampled, "ssq1_")
+      val sample = drain(sampled)
         .select(col("l_returnflag"), explode(col("__s.vals")).as("__v"))
         .localCheckpoint(true) // feeds kcnt + the sample value counts
       val kcnt = sample.groupBy(col("l_returnflag"))
@@ -5209,7 +4985,7 @@ object SparkEntry {
         .localCheckpoint(true) // |groups|·|q| rows; feeds the grade pass
       val graded = drain(Samplers.gradeEstimates(
         stream.select(col("l_returnflag"), col("cents").as("__v")),
-        est, g), "ssq2_")
+        est, g))
       Samplers.sampleQuantilesReport(graded, kcnt, g, 50000L)
         .orderBy(col("l_returnflag"), col("q"))
     }),
@@ -5238,19 +5014,14 @@ object SparkEntry {
 
     // ---- STREAMING Kendall tau-b (contingency cells as Complete state) ----
     "streaming_kendall_tau_lineitem" -> ((s, dir) => {
-      val batch = t(s, dir, "lineitem")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/lineitem*.parquet")
+      val stream = Tables.stream(s, dir, "lineitem")
         .withColumn("x", expr(
           "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)" +
             " div 1000000"))
         .withColumn("y", col("l_quantity").cast("long"))
       val counts = stream.groupBy(col("l_returnflag"), col("x"), col("y"))
         .agg(count(lit(1)).as("n"))
-      val name = "stream_tau_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.kendallTauFromCounts(drained, "x", "y", "n",
           Seq("l_returnflag"))
         .orderBy(col("l_returnflag"))
@@ -5258,16 +5029,11 @@ object SparkEntry {
 
     // ---- STREAMING vocabulary richness (token dictionary as state) --------
     "streaming_vocab_richness_docs" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/documents*.parquet")
+      val stream = Tables.stream(s, dir, "documents")
       val counts = stream
         .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      val name = "stream_rich_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       TextAnalysis.vocabRichnessFromCounts(drained)
     }),
 
@@ -5366,14 +5132,9 @@ object SparkEntry {
     // ---- STREAMING Mann-Kendall (same daily-total state as the trend/
     // CUSUM/ACF twins; the rank fold replays on drain) ------------------------
     "streaming_mann_kendall_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val daily = Events.trendDaily(stream)
-      val name = "stream_mk_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, daily, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, daily, OutputMode.Complete())
       Events.mannKendallFromDaily(drained).orderBy(col("event_type"))
     }),
 
@@ -5405,18 +5166,13 @@ object SparkEntry {
     // A continuously-maintained CI over the ingest: every state column is
     // an associative sum; the summary fold replays on drain.
     "streaming_bootstrap_ci_orders" -> ((s, dir) => {
-      val batch = t(s, dir, "orders")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/orders*.parquet")
+      val stream = Tables.stream(s, dir, "orders")
         .withColumn("cents",
           (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
         .withColumn("__den1", lit(1L))
       val sums = Samplers.bootstrapRatioSums(stream, "o_orderkey",
         "cents", "__den1", 32)
-      val name = "stream_boot_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, sums, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, sums, OutputMode.Complete())
       Samplers.bootstrapFromSums(drained, 32, "mean")
     }),
 
@@ -5454,18 +5210,13 @@ object SparkEntry {
     // ---- STREAMING k-anonymity (re-identification risk of the accumulated
     // stream; class-size state, Complete mode, panel fold on drain) ----------
     "streaming_k_anonymity_customer" -> ((s, dir) => {
-      val batch = t(s, dir, "customer")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/customer*.parquet")
+      val stream = Tables.stream(s, dir, "customer")
         .withColumn("bal_band",
           expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
             " div 100000"))
       val counts = Metrics.kAnonymityCounts(stream,
         Seq("c_nationkey", "c_mktsegment", "bal_band"))
-      val name = "stream_kanon_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.kAnonymityFromCounts(drained, Seq(2, 5, 10))
         .orderBy(col("k"))
     }),
@@ -5486,16 +5237,12 @@ object SparkEntry {
           "cents", (1 until 10).map(i => i * 100000L))
         .orderBy(col("q")).select(col("value"))
         .collect().map(_.getLong(0)).toSeq
-      val stream = s.readStream.schema(t(s, dir, "orders").schema)
-        .parquet(s"$dir/orders*.parquet")
+      val stream = Tables.stream(s, dir, "orders")
         .withColumn("cents",
           (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
         .withColumn("side", col("o_orderkey") % 2 === 0)
       val counts = Metrics.psiBinCounts(stream, "cents", "side", edges)
-      val name = "stream_psi_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.psiFromCounts(drained, 10).orderBy(col("bin"))
     }),
 
@@ -5589,17 +5336,11 @@ object SparkEntry {
     // the mixture statistic is licensed at EVERY drain — the twin shares
     // the batch oracle verbatim (state = batch aggregate).
     "streaming_sequential_ab_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val moments = Metrics.welchMoments(
         stream.withColumn("side", col("user_id") % 2 === 0),
         "value", "side", Seq("event_type"))
-      val name = "stream_seqab_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams
-        .runToMemory(s, moments, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.sequentialAbFromMoments(drained, Seq("event_type"))
         .orderBy(col("event_type"))
     }),
@@ -5628,17 +5369,11 @@ object SparkEntry {
     // drained |groups|-row state table. Oracle = the batch ab_test SQL
     // (the state IS the batch aggregate, micro-batch-order-free).
     "streaming_ab_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val moments = Metrics.welchMoments(
         stream.withColumn("side", col("user_id") % 2 === 0),
         "value", "side", Seq("event_type"))
-      val name = "stream_ab_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams
-        .runToMemory(s, moments, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.welchFromMoments(drained, Seq("event_type"))
         .orderBy(col("event_type"))
     }),
@@ -5720,19 +5455,14 @@ object SparkEntry {
     // z algebra runs over the drained |arms|-row table. Unit = event,
     // success = qualifying purchase, side = even/odd user, group = arm.
     "streaming_proportion_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val units = stream.select((col("user_id") % 3).as("arm"),
         (col("user_id") % 2 === 0).as("side"),
         (col("event_type") === "purchase" && col("value") >= 150.0)
           .as("success"))
       val moments =
         Metrics.proportionMoments(units, "success", "side", Seq("arm"))
-      val name = "stream_prop_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.proportionFromMoments(drained, Seq("arm"))
         .orderBy(col("arm"))
     }),
@@ -5752,18 +5482,13 @@ object SparkEntry {
 
     // ---- STREAMING pass@k (per-task counts as Complete-mode state) ---------
     "streaming_pass_at_k_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = graft.scale.Eval.passAtKCounts(
         stream.select((col("event_id") % 97).as("task"),
           (col("event_type") === "purchase" && col("value") >= 120.0)
             .as("ok")),
         "task", "ok")
-      val name = "stream_passk_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       graft.scale.Eval.passAtKFromCounts(drained, Seq(1, 5, 10))
         .orderBy(col("task"), col("k"))
     }),
@@ -6002,17 +5727,12 @@ object SparkEntry {
 
     // ---- STREAMING SRM guard (the two assignment counts as state) ----------
     "streaming_srm_guard_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = Metrics.srmCounts(
         stream.select((col("user_id") % 3).as("arm"),
           (col("user_id") % 2 === 0).as("side")),
         "side", Seq("arm"))
-      val name = "stream_srm_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.srmFromCounts(drained, Seq("arm"))
         .orderBy(col("arm"))
     }),
@@ -6064,9 +5784,7 @@ object SparkEntry {
     // — welchMoments / sequentialAbFromMoments / onlineFdrLord shared
     // with the batch path verbatim.
     "streaming_online_fdr_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val units = stream.select(col("event_type"),
         (col("user_id") % 7).as("segment"),
         (col("user_id") % 2 === 0).as("side"),
@@ -6075,10 +5793,7 @@ object SparkEntry {
           .otherwise(lit(0.0))).as("value"))
       val moments = Metrics.welchMoments(units, "value", "side",
         Seq("event_type", "segment"))
-      val name = "stream_lord_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.onlineFdrLord(
         Metrics.sequentialAbFromMoments(drained,
           Seq("event_type", "segment")),
@@ -6104,9 +5819,7 @@ object SparkEntry {
 
     // ---- STREAMING ratio-metric twin (the 12 moment sums as state) ---------
     "streaming_ratio_delta_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val units = stream.select((col("user_id") % 3).as("arm"),
         (col("user_id") % 2 === 0).as("side"),
         when(col("event_type") === "purchase", col("value"))
@@ -6115,10 +5828,7 @@ object SparkEntry {
           .otherwise(lit(0.0)).as("y"))
       val moments =
         Metrics.ratioDeltaMoments(units, "x", "y", "side", Seq("arm"))
-      val name = "stream_ratio_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.ratioDeltaFromMoments(drained, Seq("arm"))
         .orderBy(col("arm"))
     }),
@@ -6139,9 +5849,7 @@ object SparkEntry {
 
     // ---- STREAMING QTE twin (the replicate value dictionaries as state) ----
     "streaming_quantile_effect_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       // the twin PROVES the replicate dictionary is legal Complete-mode
       // state; it runs 8 replicates (the batch panel runs 32) because
       // the state the memory sink re-emits per drain is (reps+1)× the
@@ -6152,10 +5860,7 @@ object SparkEntry {
           (col("user_id") % 2 === 0).as("side"),
           col("value"), col("event_id")),
         "value", "side", "event_id", Seq("event_type"), 8)
-      val name = "stream_qte_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.qteFromCounts(drained, Seq("event_type"),
         Seq((1, 2), (9, 10)))
         .orderBy(col("event_type"), col("quantile"))
@@ -6179,18 +5884,13 @@ object SparkEntry {
 
     // ---- STREAMING calibration twin (bin counts as state) -------------------
     "streaming_calibration_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val counts = Metrics.calibrationBinCounts(
         stream.select(col("event_type"),
           ((col("event_id") % 97) / lit(96.0)).as("score"),
           (col("user_id") % 5 < 3).as("correct")),
         "score", "correct", Seq("event_type"), 10)
-      val name = "stream_cal_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, counts, OutputMode.Complete())
       Metrics.eceFromBinCounts(drained, Seq("event_type"))
         .orderBy(col("event_type"), col("bin"))
     }),
@@ -6214,9 +5914,7 @@ object SparkEntry {
 
     // ---- STREAMING post-stratification twin (stratum moments as state) -----
     "streaming_post_strat_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val moments = Metrics.postStratMoments(
         stream.select((col("user_id") % 3).as("arm"),
           col("event_type"),
@@ -6224,10 +5922,7 @@ object SparkEntry {
           (col("value") + when(col("user_id") % 2 === 0, lit(2.0))
             .otherwise(lit(0.0))).as("value")),
         "value", "side", "event_type", Seq("arm"))
-      val name = "stream_pstrat_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.postStratFromMoments(drained, Seq("arm"))
         .orderBy(col("arm"))
     }),
@@ -6247,19 +5942,14 @@ object SparkEntry {
 
     // ---- STREAMING sequential two-proportion (same four-count state) -------
     "streaming_sequential_proportion_events" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/events*.parquet")
+      val stream = Tables.stream(s, dir, "events")
       val units = stream.select((col("user_id") % 3).as("arm"),
         (col("user_id") % 2 === 0).as("side"),
         (col("event_type") === "purchase" && col("value") >= 150.0)
           .as("success"))
       val moments =
         Metrics.proportionMoments(units, "success", "side", Seq("arm"))
-      val name = "stream_seqprop_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Metrics.sequentialProportionFromMoments(drained, Seq("arm"))
         .orderBy(col("arm"))
     }),
@@ -6271,16 +5961,11 @@ object SparkEntry {
     // mean/shift algebra runs over the drained table. Oracle = the batch
     // embedding_drift SQL verbatim (state IS the batch aggregate).
     "streaming_embedding_drift_embeddings" -> ((s, dir) => {
-      val batch = t(s, dir, "embeddings")
-      val stream = s.readStream.schema(batch.schema)
-        .parquet(s"$dir/embeddings*.parquet")
+      val stream = Tables.stream(s, dir, "embeddings")
       val moments = Similarity.embeddingDriftMoments(
         stream.withColumn("side", col("vec_id") % 2 === 0),
         "embedding", "side")
-      val name = "stream_edrift_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val drained = graft.streaming.Streams.runToMemory(s, moments, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val drained = Streams.runToMemory(s, moments, OutputMode.Complete())
       Similarity.embeddingDriftFromMoments(drained)
         .orderBy(col("dim"))
     })

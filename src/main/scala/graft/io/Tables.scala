@@ -45,6 +45,13 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.schema(schema(name)).parquet(s"$sfDir/$name.parquet")
 
+  /** The same table as a file stream, read with the declared schema. The
+    * path is a glob, not the bare file: a FileStreamSource requires its
+    * basePath to be a directory.
+    */
+  def stream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.readStream.schema(schema(name)).parquet(s"$sfDir/$name*.parquet")
+
   /** Spread a COMPUTE-DENSE pipeline input across the session's cores.
     *
     * The harness corpus is one parquet file with one row group per table,

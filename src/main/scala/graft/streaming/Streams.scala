@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.util.UUID
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -149,9 +151,28 @@ object Streams {
       }
   }
 
-  /** Run a streaming DataFrame to completion against a memory sink and
-    * return the collected result table (test/dev harness; production would
+  /** Run a streaming DataFrame to completion against a memory sink under a
+    * fresh unique name and return the collected result table (test/dev
+    * harness; production would
     * `writeStream.format("parquet").option("checkpointLocation", …)`).
+    *
+    * STATE-PARTITION SIZING: state-store commit cost is per
+    * (partition × state store × micro-batch) — every partition writes and
+    * fsyncs a delta file per batch — while the aggregation work above the
+    * store is already bounded by map-side partial aggregation (reduce
+    * input = map tasks × live keys, not stream rows). So the stream runs
+    * its state on the session's `spark.sql.shuffle.partitions` capped at 8
+    * (never raised: small verify sessions run at 4). Result-invariant:
+    * exact aggregation state, Complete/Append output values unchanged.
+    * Measured at sf0.1/local[32]: 32 → 8 saves ~0.6-0.7 s per drain.
+    *
+    * MUTATION WINDOW: `start()` constructs the query's StreamExecution,
+    * which clones the session, so the stream keeps the conf it saw at
+    * `start()`. The cap is set, the query started and the session's value
+    * restored under one lock; the drain itself runs outside it. Concurrent
+    * drains on one session each get the cap and leave the session's own
+    * value in place. Other work on the session during a `start()` would
+    * still read the cap.
     *
     * COMPLETE-MODE CONTRACT: in `OutputMode.Complete` every micro-batch
     * re-emits the ENTIRE state table, so both the state and the per-batch
@@ -169,50 +190,23 @@ object Streams {
   def runToMemory(
       spark: SparkSession,
       df: DataFrame,
-      name: String,
       outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    // STATE-PARTITION SIZING: state-store commit cost is per
-    // (partition × state store × micro-batch) — every partition writes
-    // and fsyncs a delta file per batch — while the aggregation work
-    // above the store is already bounded by map-side partial aggregation
-    // (reduce input = map tasks × live keys, not stream rows). Partition
-    // count should therefore track the STATE-DICTIONARY size, not the
-    // cluster width: default = the session setting capped at 8 (never
-    // raised — small verify sessions run at 4), overridable for
-    // genuinely huge state dictionaries via
-    // SPARK_GRAFT_STREAM_STATE_PARTITIONS. Result-invariant (exact
-    // aggregation state; Complete/Append output values unchanged).
-    // Measured at sf0.1/local[32]: 32 → 8 saves ~0.6-0.7 s per drain
-    // across the ~65 drains of the bench suite. Generalizes the
-    // per-query cap the stream-stream join has carried since round 2.
-    // SESSION-GLOBAL MUTATION: the cap swaps spark.sql.shuffle.partitions
-    // for the duration of the drain and restores it in finally — sound
-    // only because the harness runs queries SEQUENTIALLY on the session
-    // (Bench/Verify both do); concurrent query construction during a
-    // drain would plan with the capped value, and interleaved drains
-    // could restore each other's values. A concurrent deployment should
-    // clone the session (spark.newSession()) per drain instead.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-      .map(v => v.toIntOption.filter(_ > 0).getOrElse(throw new
-        IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive int, " +
-            s"got '$v'")))
-      // the override exists for genuinely huge state dictionaries but is
-      // still capped at the session setting — "never raised" (a 4-core
-      // verify session must not suddenly run 32 state stores)
-      .map(v => math.min(v, prev.toInt))
-      .getOrElse(math.min(prev.toInt, 8))
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val name = "stream_" + UUID.randomUUID.toString.replace("-", "")
+    val q = startLock.synchronized {
+      val prev = spark.conf.get(ShufflePartitions)
+      spark.conf.set(ShufflePartitions, math.min(prev.toInt, 8).toString)
+      try {
+        df.writeStream
+          .format("memory")
+          .queryName(name)
+          .outputMode(outputMode)
+          .start()
+      } finally spark.conf.set(ShufflePartitions, prev)
+    }
+    try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val startLock = new Object
 }

@@ -1,10 +1,15 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.UUID
+import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch,
+  Executors, TimeUnit}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 import graft.streaming.Streams
 import graft.streaming.Streams.{SessionEvent, SessionOut}
@@ -24,7 +29,7 @@ class StreamingSpec extends SparkSpec {
       Ev(t(120), 1, "buy", 10.0), Ev(t(3700), 1, "click", 4.0))
     val out = Streams.runToMemory(spark,
       Streams.windowedAgg(in.toDF(), window = "1 hour"),
-      "win_agg", OutputMode.Complete)
+      OutputMode.Complete)
     val rows = out
       .select(unix_timestamp($"window.start").as("w"), $"event_type",
         $"n_events", $"sum_value")
@@ -39,8 +44,7 @@ class StreamingSpec extends SparkSpec {
     import graft.io.Tables
     import graft.scale.Events
     val batch = Tables.load(spark, sf, "events")
-    val stream = spark.readStream.schema(batch.schema)
-      .parquet(s"$sf/events*.parquet")
+    val stream = Tables.stream(spark, sf, "events")
     val agg = stream
       .withColumn("__ts", Events.tsAsTimestamp(stream))
       .withWatermark("__ts", "1 hour")
@@ -78,8 +82,7 @@ class StreamingSpec extends SparkSpec {
     import graft.io.Tables
     import graft.scale.Events
     val batch = Tables.load(spark, sf, "events")
-    val stream = spark.readStream.schema(batch.schema)
-      .parquet(s"$sf/events*.parquet")
+    val stream = Tables.stream(spark, sf, "events")
     val agg = stream
       .withColumn("__ts", Events.tsAsTimestamp(stream))
       .withWatermark("__ts", "1 hour")
@@ -101,7 +104,7 @@ class StreamingSpec extends SparkSpec {
           .agg(count(lit(1)).as("n_events"))
           .select($"user_id",
             unix_micros($"session_window.end").as("end_us"), $"n_events"),
-        "sessapp_all", OutputMode.Complete)
+        OutputMode.Complete)
       .as[(Long, Long, Long)].collect().toSet
     val maxUs = batch
       .select(max(unix_micros(Events.tsAsTimestamp(batch)))).as[Long].head()
@@ -121,8 +124,7 @@ class StreamingSpec extends SparkSpec {
       Ev(t(0), 1, "click", 1.0), Ev(t(10), 1, "click", 1.0),
       Ev(t(20), 2, "click", 2.0))
     val out = Streams.runToMemory(spark,
-      Streams.dedupWithinWatermark(in.toDF(), Seq("user_id", "event_type")),
-      "dedup_stream")
+      Streams.dedupWithinWatermark(in.toDF(), Seq("user_id", "event_type")))
     assert(out.count() === 2)
     assert(out.select("user_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
   }
@@ -137,8 +139,7 @@ class StreamingSpec extends SparkSpec {
     // advance the watermark far enough to emit both sessions
     in.addData(Ev(t(100000), 9, "tick", 0.0))
     val out = Streams.runToMemory(spark,
-      Streams.sessionWindows(in.toDF(), gap = "30 minutes"),
-      "sess_win")
+      Streams.sessionWindows(in.toDF(), gap = "30 minutes"))
     val u1 = out.filter($"user_id" === 1)
       .select($"n_events", $"sum_value").as[(Long, Double)]
       .collect().toSet
@@ -161,8 +162,7 @@ class StreamingSpec extends SparkSpec {
       streamedRaw.withColumn("ts_t", Events.tsAsTimestamp(streamedRaw))
     val agg = Streams.windowedAgg(streamed, tsCol = "ts_t",
       window = "1 hour", watermark = "2 hours")
-    val out = Streams.runToMemory(spark, agg, "real_events_win",
-      org.apache.spark.sql.streaming.OutputMode.Complete)
+    val out = Streams.runToMemory(spark, agg, OutputMode.Complete)
     val streamTotal = out.agg(sum("n_events")).as[Long].head()
     val batchTotal = batch.count()
     assert(streamTotal === batchTotal)
@@ -229,7 +229,7 @@ class StreamingSpec extends SparkSpec {
     val joined = side("purchase", "p_user", "p_ts").join(
       side("click", "c_user", "c_ts"),
       expr("c_user = p_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
-    val out = Streams.runToMemory(spark, joined, "ss_join")
+    val out = Streams.runToMemory(spark, joined)
     val users = out.select($"p_user").as[Long].collect().sorted.toSeq
     assert(users === Seq(1L, 4L), s"unexpected join survivors: $users")
   }
@@ -594,8 +594,7 @@ class StreamingSpec extends SparkSpec {
       SessionEvent(1, 0, 1.0), SessionEvent(1, 10, 2.0), SessionEvent(1, 20, 3.0),
       SessionEvent(2, 0, 5.0), SessionEvent(2, 4000, 7.0))
     val out = Streams.runToMemory(spark,
-      Streams.cappedSessions(in.toDS(), gapSeconds = 1800L, maxEvents = 3L).toDF(),
-      "capped_sess")
+      Streams.cappedSessions(in.toDS(), gapSeconds = 1800L, maxEvents = 3L).toDF())
     val rows = out.as[SessionOut].collect()
     val u1 = rows.filter(_.user_id == 1)
     assert(u1.length === 1 && u1.head.closed_by === "cap" &&
@@ -603,5 +602,51 @@ class StreamingSpec extends SparkSpec {
     val u2 = rows.filter(_.user_id == 2)
     assert(u2.length === 1 && u2.head.closed_by === "gap" &&
       u2.head.n_events === 1 && u2.head.sum_value === 5.0)
+  }
+
+  test("overlapping runToMemory drains run state at the cap and leave the " +
+      "session's shuffle partitions unchanged") {
+    import graft.io.Tables
+    val key = "spark.sql.shuffle.partitions"
+    val session = spark.newSession()
+    session.conf.set(key, "12")
+    val parts = new ConcurrentHashMap[UUID, Set[Long]]()
+    val firstStarted = new CountDownLatch(1)
+    val terminated = new CountDownLatch(2)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        firstStarted.countDown()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        parts.merge(e.progress.runId,
+          e.progress.stateOperators.map(_.numShufflePartitions).toSet, _ ++ _)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    session.streams.addListener(listener)
+    try {
+      // the second, larger drain starts once the first is running, so it
+      // ends last: a save/restore around each whole drain would leave the
+      // session at the first drain's cap
+      val pool = Executors.newFixedThreadPool(2)
+      val drains = try {
+        Seq(Seq("event_type"), Seq("user_id", "event_type")).map { keys =>
+          pool.submit(new Callable[Long] {
+            def call(): Long = {
+              val counts = Tables.stream(session, sf, "events")
+                .groupBy(keys.map(col): _*).count()
+              if (keys.size > 1)
+                assert(firstStarted.await(60, TimeUnit.SECONDS))
+              Streams.runToMemory(session, counts, OutputMode.Complete).count()
+            }
+          })
+        }.map(_.get(5, TimeUnit.MINUTES))
+      } finally pool.shutdown()
+      assert(drains.forall(_ > 0))
+      assert(session.conf.get(key) === "12")
+      // query-terminated events follow each query's progress events
+      assert(terminated.await(60, TimeUnit.SECONDS))
+      assert(parts.size === 2)
+      parts.values.forEach(p => assert(p === Set(8L)))
+    } finally session.streams.removeListener(listener)
   }
 }

@@ -18,6 +18,14 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("each table streams with its declared schema") {
+    for (name <- Tables.names) {
+      val stream = Tables.stream(spark, sf, name)
+      assert(stream.isStreaming, name)
+      assert(stream.schema === Tables.load(spark, sf, name).schema, name)
+    }
+  }
+
   test("loading all ten tables starts no Spark job; unknown names fail fast") {
     val group = s"tables-load-${java.util.UUID.randomUUID()}"
     val jobs = new AtomicInteger()
@@ -36,6 +44,7 @@ class TablesSpec extends SparkSpec {
     try {
       sc.setJobGroup(group, "Tables.load job count")
       Tables.names.foreach(Tables.load(spark, sf, _))
+      Tables.names.foreach(Tables.stream(spark, sf, _))
       // Listener events arrive in order, so once this job's start is seen,
       // every job the loads started has been counted.
       sc.setLocalProperty("sentinel", "1")
@@ -47,10 +56,11 @@ class TablesSpec extends SparkSpec {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    val e = intercept[IllegalArgumentException](
-      Tables.load(spark, sf, "lineitems"))
-    assert(e.getMessage.contains("lineitems"))
-    Tables.names.foreach(n => assert(e.getMessage.contains(n)))
+    for (open <- Seq(Tables.load _, Tables.stream _)) {
+      val e = intercept[IllegalArgumentException](open(spark, sf, "lineitems"))
+      assert(e.getMessage.contains("lineitems"))
+      Tables.names.foreach(n => assert(e.getMessage.contains(n)))
+    }
   }
 
   test("loading events leaves nanosAsLong unset in the session") {
