@@ -1,61 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 object Bench {
+  /** Failed query -> (exception class, first message line) of its first
+    * failure.
+    */
+  type Errors = mutable.Map[String, (String, String)]
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // failed query -> (exception class, first message line) of its first
-    // failure; the keys are the `errors` list
-    val errors = scala.collection.mutable.TreeMap[String, (String, String)]()
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      // noop sink: forces full evaluation of every output column (a bare
-      // count() would let Catalyst prune projection-only work away).
-      // Failures are RECORDED, not just swallowed — a broken query returns
-      // in milliseconds and would otherwise read as a bench speedup.
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case NonFatal(e) =>
-        val firstLine = Option(e.getMessage)
-          .flatMap(_.linesIterator.nextOption()).getOrElse("")
-        errors.getOrElseUpdate(name, (e.getClass.getName, firstLine))
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // Free this query's localCheckpoint blocks before the next query:
-      // 166 queries share one block manager, and accumulated
-      // MEMORY_AND_DISK checkpoint RDDs from earlier queries degrade
-      // later ones through eviction/GC pressure — the r01/r02 driver
-      // benches showed exactly the alphabetical-tail slowdown that
-      // predicts. Unpersist is async (non-blocking) and the finished
-      // query's frames are unreachable, so nothing re-reads the blocks.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      sec
-    }
-
-    // Warm-up: absorb JVM/classloader/codegen/parquet-footer start-up cost
-    // so per-query timings reflect steady state rather than whichever query
-    // happens to run first (~20 s of one-time cost otherwise lands on it).
-    // Mixed shapes: scan+agg, window, broadcast join+concat, regex transform.
-    val warmup = Seq("q1_full_pricing", "window_analytics_orders",
-      "em_blocked_pairs", "transform_affine_lineitem")
-    // fail loudly if a warm-up query is renamed/removed — run() swallows
-    // per-query errors, which would silently skip warm-up and land the
-    // one-time JVM/codegen cost on the first measured query
-    warmup.foreach(n => require(SparkEntry.queries.contains(n),
-      s"warm-up query '$n' missing from SparkEntry.queries"))
-    val tw0 = System.nanoTime()
-    warmup.foreach(run)
-    val warmupSec = (System.nanoTime() - tw0) / 1e9
+    val spark = Session.local(Session.cpus)
+    val errors: Errors = mutable.TreeMap()
+    val warmupSec = warmUp(spark, sfDir, errors)
 
     // Deterministic name order (Map iteration order is arbitrary).
     // INTERLEAVED median-of-N passes: the full sorted list runs N times
@@ -75,8 +33,9 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n))).sorted
     val samples = names.map(n => n ->
-      scala.collection.mutable.ArrayBuffer[Double]()).toMap
-    for (_ <- 1 to passes; n <- names) samples(n) += run(n)
+      mutable.ArrayBuffer[Double]()).toMap
+    for (_ <- 1 to passes; n <- names)
+      samples(n) += run(spark, sfDir, n, errors)
     def median(v: Seq[Double]): Double = { val s = v.sorted; s(s.size / 2) }
     val results = names.map(n => n -> median(samples(n).toSeq))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -84,10 +43,6 @@ object Bench {
     val qmins = names.map(n => s"\"" + n + "\":" + samples(n).min)
       .mkString("{", ",", "}")
     val errs = errors.keys.map(n => s"\"$n\"").mkString("[", ",", "]")
-    val errDetail = errors.map { case (n, (cls, msg)) =>
-      s"\"$n\":{\"class\":${Verify.jsonString(cls)}," +
-        s"\"message\":${Verify.jsonString(msg)}}"
-    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // min-pass total beside the median total: a mid-suite host stall
     // inflates 2-of-3 medians of whichever queries it straddles but
@@ -95,7 +50,7 @@ object Bench {
     // code-vs-code headline (the r12 driver capture burned adjudication
     // on exactly this — 17.26 s median / 2.74 s min on untouched code)
     val totalMin = names.map(n => samples(n).min).sum
-    val full = s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","passes":$passes,"warmup_sec":$warmupSec,"errors":$errs,"errors_detail":$errDetail,"queries":$qs,"queries_min":$qmins,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","passes":$passes,"warmup_sec":$warmupSec,"errors":$errs,"errors_detail":${errorsDetail(errors)},"queries":$qs,"queries_min":$qmins,"sf":"$sfDir"}"""
     // The full per-query map (~6 KB for 166 queries) goes to a known file:
     // a consumer that captures only the TAIL of stdout truncates the long
     // line mid-JSON (both prior rounds' bench records show `parsed: null`
@@ -112,4 +67,59 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"warmup_sec":$warmupSec,"n_queries":${results.size},"errors":$errs,"slowest":$slowest,"queries_file":"$outPath","sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Times registry query `name` over the corpus in `sfDir` and returns its
+    * wall seconds. A failure is recorded in `errors`, not just swallowed: a
+    * broken query returns in milliseconds and would otherwise read as a
+    * speedup.
+    */
+  def run(spark: SparkSession, sfDir: String, name: String,
+      errors: Errors): Double = {
+    val t0 = System.nanoTime()
+    // noop sink: forces full evaluation of every output column (a bare
+    // count() would let Catalyst prune projection-only work away).
+    try SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    catch { case NonFatal(e) =>
+      val firstLine = Option(e.getMessage)
+        .flatMap(_.linesIterator.nextOption()).getOrElse("")
+      errors.getOrElseUpdate(name, (e.getClass.getName, firstLine))
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    // Free this query's localCheckpoint blocks before the next query:
+    // 166 queries share one block manager, and accumulated
+    // MEMORY_AND_DISK checkpoint RDDs from earlier queries degrade
+    // later ones through eviction/GC pressure — the r01/r02 bench
+    // captures showed exactly the alphabetical-tail slowdown that
+    // predicts. Unpersist is async (non-blocking) and the finished
+    // query's frames are unreachable, so nothing re-reads the blocks.
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    sec
+  }
+
+  // Warm-up: absorb JVM/classloader/codegen/parquet-footer start-up cost
+  // so per-query timings reflect steady state rather than whichever query
+  // happens to run first (~20 s of one-time cost otherwise lands on it).
+  // Mixed shapes: scan+agg, window, broadcast join+concat, regex transform.
+  private val warmup = Seq("q1_full_pricing", "window_analytics_orders",
+    "em_blocked_pairs", "transform_affine_lineitem")
+
+  /** Runs the warm-up list once over `sfDir`; returns its seconds. */
+  def warmUp(spark: SparkSession, sfDir: String, errors: Errors): Double = {
+    // fail loudly if a warm-up query is renamed/removed — run() swallows
+    // per-query errors, which would silently skip warm-up and land the
+    // one-time JVM/codegen cost on the first measured query
+    warmup.foreach(n => require(SparkEntry.queries.contains(n),
+      s"warm-up query '$n' missing from SparkEntry.queries"))
+    val t0 = System.nanoTime()
+    warmup.foreach(run(spark, sfDir, _, errors))
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The `errors_detail` JSON object: name -> {"class", "message"}. */
+  def errorsDetail(errors: Iterable[(String, (String, String))]): String =
+    errors.map { case (n, (cls, msg)) =>
+      s"${Verify.jsonString(n)}:{\"class\":${Verify.jsonString(cls)}," +
+        s"\"message\":${Verify.jsonString(msg)}}"
+    }.mkString("{", ",", "}")
 }

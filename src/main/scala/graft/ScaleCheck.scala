@@ -1,1717 +1,131 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.plans.Joins
-import graft.sample.Samplers
-import graft.scale.{Baskets, Dedup, Events, Similarity, TextAnalysis}
 
-/** Scaling sanity harness: times the shuffle-heavy operators at 1× and N×
-  * the sf0.1 corpus (N× = union with key-shifted copies, so dup/cluster
-  * structure replicates instead of degenerating) and prints the time ratio
-  * next to the data ratio. A ratio well above N flags a scaling cliff
-  * (quadratic candidate generation, single-partition funnel, driver
-  * collect); ~N or below means the operator parallelizes.
+/** Scaling check over the query registry: writes N key-shifted replicas of
+  * the corpus into a temporary directory, times each named registry query
+  * over the 1× corpus and over the N× one, and prints the time ratio next
+  * to the data ratio. A ratio well above N flags a scaling cliff (quadratic
+  * candidate generation, single-partition funnel, a full `collect()`); ~N or
+  * below means the query parallelizes.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_SCALE_N=8 \
-  *   sbt "runMain graft.ScaleCheck"
+  *   sbt "runMain graft.ScaleCheck [query ...]"   (default: every query)
   */
 object ScaleCheck {
 
-  /** N key-shifted copies. When `saltTextCol` is set, every TOKEN of each
-    * copy gets a copy-distinct prefix, making the copies' shingle spaces
-    * disjoint — the N× corpus is then N independent replicas of the base
-    * near-dup structure. Without this, copies share shingles and the
-    * near-dup PAIR mass itself grows ~N² (total mass duplication) — a data
-    * property, not the algorithmic scaling being measured.
+  /** Key shift between copies. It must exceed every key plus the
+    * 10,000,000 node offset the trade-graph queries add to customer keys
+    * (`pagerank_trade_orders` and its siblings): with a 10,000,000 shift,
+    * customer c of copy i would be the same node as supplier c of copy
+    * i + 1, chaining the copies into one graph. A multiple of 10,000,000,
+    * so a key's residue modulo any divisor of it is the same in every copy.
     */
-  private def replicate(df: DataFrame, idCol: String, n: Int,
-      saltTextCol: Option[String] = None): DataFrame = {
-    val width = 10000000L
-    (0 until n).map { i =>
-      val shifted = df.withColumn(idCol, col(idCol) + lit(i * width))
-      // copy 0 stays byte-identical to the 1x baseline (it still shares no
-      // shingles with the prefixed copies) — salting it too would mix
-      // data-shape differences into the scaling ratio being measured
-      if (i == 0) shifted
-      else saltTextCol.fold(shifted) { t =>
-        if (df.schema(t).dataType
-            .isInstanceOf[org.apache.spark.sql.types.ArrayType])
-          // vector "salt": rotate components by the copy index — norms and
-          // within-copy geometry are preserved, cross-copy cosines collapse
-          // to noise, so duplicated data can't inflate true pair mass
-          shifted.withColumn(t,
-            expr(s"concat(slice($t, ${i + 1}, size($t) - $i), " +
-              s"slice($t, 1, $i))"))
-        else
-          shifted.withColumn(t, concat_ws(" ",
-            transform(split(col(t), " "), w => concat(lit(s"c$i"), w))))
+  private[graft] val width = 1000000000L
+
+  /** The BIGINT primary and foreign keys of each replicated table. Shifting
+    * all of them by the same `i × width` keeps every join inside copy i.
+    * `region` and `nation` (INT keys) are not replicated.
+    */
+  private[graft] val keys: Map[String, Seq[String]] = Map(
+    "customer" -> Seq("c_custkey"),
+    "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "events" -> Seq("event_id", "user_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+  require(keys.keySet ++ Set("region", "nation") == Tables.names.toSet,
+    "every corpus table but region and nation needs its keys listed")
+
+  /** Copy `i ≥ 1` of `table`: keys shifted by `i × width`. Every token of
+    * a document gets a copy-distinct prefix, making the copies' shingle
+    * spaces disjoint, so the N× corpus holds N independent replicas of the
+    * base near-dup structure; without it copies share shingles and the
+    * near-dup PAIR mass grows ~N² (total mass duplication), a data
+    * property rather than the scaling being measured. Every word of a part
+    * name gets a 3-fold copy tag as a suffix (`s1s1s1`), for the same
+    * reason: the name-similarity queries would otherwise match each name
+    * to its N − 1 twins. The tag keeps copies at least 3 edits apart (above
+    * the edit-distance queries' threshold of 2), and as a suffix it keeps
+    * `LIKE 'small%'` matching in every copy. Embeddings are rotated by `i`
+    * components: norms and within-copy geometry are kept, cross-copy
+    * cosines collapse to noise.
+    */
+  private def shifted(df: DataFrame, table: String, i: Int): DataFrame = {
+    val keyed = keys(table).foldLeft(df)((d, k) =>
+      d.withColumn(k, col(k) + lit(i * width)))
+    table match {
+      case "documents" => keyed.withColumn("text", concat_ws(" ",
+        transform(split(col("text"), " "), w => concat(lit(s"c$i"), w))))
+      case "part" => keyed.withColumn("p_name", concat_ws(" ",
+        transform(split(col("p_name"), " "), w => concat(w, lit(s"s$i" * 3)))))
+      case "embeddings" => keyed.withColumn("embedding", expr(
+        s"concat(slice(embedding, ${i + 1}, size(embedding) - $i), " +
+          s"slice(embedding, 1, $i))"))
+      case _ => keyed
+    }
+  }
+
+  /** Writes the N× corpus of `sfDir` into `outDir`: `region` and `nation`
+    * as copies of their base files, every other table as a directory
+    * `<table>.parquet` of N files, one per copy. Copy 0 is the base file
+    * itself, so the 1× data sits byte-identical inside the N× data.
+    */
+  def writeReplicas(spark: SparkSession, sfDir: String, n: Int,
+      outDir: String): Unit = {
+    require(n >= 2, s"SPARK_GRAFT_SCALE_N must be at least 2, got $n")
+    Tables.names.foreach { table =>
+      val src = Paths.get(sfDir, s"$table.parquet")
+      val dst = Paths.get(outDir, s"$table.parquet")
+      if (!keys.contains(table)) Files.copy(src, dst)
+      else {
+        val base = Tables.load(spark, sfDir, table)
+        // one write per copy: a union of single-partition inputs would be
+        // planned as ONE partition, i.e. one file holding every copy
+        for (i <- 1 until n) shifted(base, table, i).coalesce(1)
+          .write.mode("append").parquet(dst.toString)
+        Files.copy(src, dst.resolve("part-copy0.parquet"))
       }
-    }.reduce(_ unionByName _)
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names =
+      if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach(q => require(SparkEntry.queries.contains(q),
+      s"unknown query '$q'"))
+    val bigDir = Files.createTempDirectory("graft_scalecheck")
+    sys.addShutdownHook(Verify.rm(bigDir.toFile))
+    val spark = Session.local(Session.cpus)
+    writeReplicas(spark, sfDir, n, bigDir.toString)
 
-    val docs = Tables.load(spark, sfDir, "documents")
-    val events = Tables.load(spark, sfDir, "events")
-    val lineitem = Tables.load(spark, sfDir, "lineitem")
-    val orders = Tables.load(spark, sfDir, "orders")
-    val embeddings = Tables.load(spark, sfDir, "embeddings")
-    val part = Tables.load(spark, sfDir, "part")
-    val customer = Tables.load(spark, sfDir, "customer")
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    val cases: Seq[(String, DataFrame => DataFrame, DataFrame, String, Option[String])] = Seq(
-      ("jaccard_pairs",
-        (d: DataFrame) => Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.2, 100),
-        docs, "doc_id", Some("text")),
-      ("dup_clusters",
-        (d: DataFrame) => Dedup.duplicateClusters(d,
-          Dedup.minhashLsh(d, "doc_id", "text", 8, 2, 3), "doc_id"),
-        docs, "doc_id", Some("text")),
-      ("dup_clusters_star",
-        // same pair derivation, star-contraction CC — rounds bounded by
-        // log² independent of diameter, per-round mass shrinks
-        (d: DataFrame) => Dedup.connectedComponentsStar(d,
-          Dedup.minhashLsh(d, "doc_id", "text", 8, 2, 3), "doc_id"),
-        docs, "doc_id", Some("text")),
-      ("leakage_split",
-        (d: DataFrame) => Dedup.leakageSafeSplit(d,
-          Dedup.minhashLsh(d, "doc_id", "text", 8, 2, 3), "doc_id", 0.2),
-        docs, "doc_id", Some("text")),
-      ("passage_dedup",
-        (d: DataFrame) => Dedup.passageDedup(d, "doc_id", "text", 10),
-        docs, "doc_id", Some("text")),
-      ("readability",
-        // one explode + one per-doc hash-agg, map-side sentence count
-        (d: DataFrame) => TextAnalysis.readability(d, "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("kendall_tau",
-        // one contingency hash-agg; C/D mass is the |dict|^2-per-group
-        // self-join (bands fixed, so the dictionary does not grow with
-        // the corpus — only the first agg does)
-        (d: DataFrame) => graft.metrics.Metrics.kendallTauB(
-          d.withColumn("price_band",
-              expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 " +
-                "AS BIGINT) div 1000000"))
-            .withColumn("qty", col("l_quantity").cast("long")),
-          "price_band", "qty", Seq("l_returnflag")),
-        lineitem, "l_orderkey", None),
-      ("spearman",
-        // two value-dictionary rank tables via the range-partitioned
-        // prefix-sum scaffold + one keyed join back + one moment agg
-        (d: DataFrame) => graft.metrics.Metrics.spearmanCorr(
-          d.withColumn("cents",
-              (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long"))
-            .withColumn("qty", col("l_quantity").cast("long")),
-          "cents", "qty"),
-        lineitem, "l_orderkey", None),
-      ("cluster_balanced",
-        // broadcast codebook argmin hash-agg + dictionary-scale quotas +
-        // per-cluster partitioned pick
-        (d: DataFrame) => graft.scale.Similarity.clusterBalancedSelect(
-          d, embeddings.filter(col("vec_id") < 4)
-            .select(col("vec_id").as("centroid_id"),
-              graft.scale.Similarity.quantize(col("embedding")).as("centv")),
-          "vec_id", "embedding", 300L),
-        embeddings, "vec_id", None),
-      ("psi_drift",
-        // two reference selection passes + one binning pass, edges ride a
-        // 1-row broadcast — linear end to end
-        (d: DataFrame) => graft.metrics.Metrics.psiDrift(
-          d.withColumn("cents",
-              (col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .withColumn("side", col("user_id") % 2 === 0),
-          "cents", "side", 10),
-        events, "user_id", None),
-      ("k_anonymity",
-        // one fingerprint hash-agg; the per-k fold is class-dictionary scale
-        (d: DataFrame) => graft.metrics.Metrics.kAnonymity(
-          d.withColumn("band",
-            expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)" +
-              " div 100000")),
-          Seq("o_orderpriority", "o_orderstatus", "band"), Seq(2, 5, 10)),
-        orders, "o_orderkey", None),
-      ("script_id",
-        // pure map (9 regexp strip-counts per row, no shuffle) — the ratio
-        // IS the scan ratio
-        (d: DataFrame) => TextAnalysis.scriptId(d, "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("tokenizer_fertility",
-        // UNsalted copies (the bpe_train collapse rationale): corpus mass
-        // collapses to the word dictionary once; rounds stay vocab-bound
-        (d: DataFrame) => TextAnalysis.tokenizerFertility(
-          d, "lang", "text", 8),
-        docs, "doc_id", None),
-      ("video_dup",
-        // shot-key sets -> banded MinHash buckets -> exact-Jaccard verify;
-        // salted copies keep dup structure per replica, candidate mass
-        // tracks band collisions (never all-pairs)
-        (d: DataFrame) => {
-          val base = d.select(col("doc_id"), col("text"))
-          val echo = base.filter(col("doc_id") % 13 === 0)
-            .withColumn("doc_id", col("doc_id") + lit(999999999L))
-          graft.scale.Multimodal.videoDupPairs(
-            graft.scale.Multimodal.fromDocuments(base.unionByName(echo)))
-        },
-        docs, "doc_id", Some("text")),
-      ("sequence_pack_manifest",
-        // token-count scan + the range-partitioned prefix-sum scaffold
-        // (the one global exchange) + projection
-        (d: DataFrame) => TextAnalysis.bfdPackManifest(
-          d, "doc_id", "text", 256),
-        docs, "doc_id", None),
-      ("sequence_pack",
-        // one token-count scan + one hash-agg to the <=log2(C)+1 bucket
-        // dictionary; the packing itself is the closed form (no sort)
-        (d: DataFrame) => TextAnalysis.bfdPack(d, "text", 256),
-        docs, "doc_id", None),
-      ("unigram_encode",
-        // the bpe_encode collapse discipline: held-out corpus -> (source,
-        // word) dictionary in one hash-agg; the Viterbi DP runs per
-        // DISTINCT word against a broadcast piece map (UNsalted copies —
-        // the word dictionary stays vocab-bound)
-        (d: DataFrame) => TextAnalysis.unigramEncode(
-          d.filter(col("doc_id") % 5 =!= 0),
-          d.filter(col("doc_id") % 5 === 0), "source", "text", 3, 40, 2),
-        docs, "doc_id", None),
-      ("decontaminate_fuzzy",
-        // eval side stays benchmark-scale (the unreplicated % 20 slice of
-        // the ORIGINAL corpus) while the corpus side replicates — the real
-        // deployment shape; candidate mass tracks corpus band collisions
-        (d: DataFrame) => Dedup.decontaminateFuzzy(
-          d.filter(col("doc_id") % 20 =!= 0),
-          docs.filter(col("doc_id") % 20 === 0),
-          "doc_id", "text", 8, 2, 3, 600000L),
-        docs, "doc_id", Some("text")),
-      ("contamination_report",
-        // the decontaminate_fuzzy shape + a benchmark-label broadcast and
-        // two dictionary folds — candidate mass tracks corpus band
-        // collisions exactly as the single-benchmark path
-        (d: DataFrame) => Dedup.contaminationReport(
-          d.filter(col("doc_id") % 20 =!= 0),
-          docs.filter(col("doc_id") % 20 === 0)
-            .withColumn("benchmark",
-              concat(lit("bench_"), (col("doc_id") % 3).cast("string"))),
-          "doc_id", "text", "benchmark", "n_chars", 8, 2, 3, 600000L),
-        docs, "doc_id", Some("text")),
-      ("blocklist",
-        // one token explode + broadcast dictionary join + per-doc hash-agg
-        (d: DataFrame) => TextAnalysis.blocklistFilter(d, "doc_id", "text",
-          docs.sparkSession.createDataFrame(
-            Seq(Tuple1("slow"), Tuple1("broken"), Tuple1("spam"),
-              Tuple1("junk"))).toDF("term"), 100000L),
-        docs, "doc_id", None),
-      ("vocab_richness",
-        // one explode + token hash-agg + 1-row fold; salted copies grow
-        // the vocabulary ~Nx (the realistic crawl-growth case)
-        (d: DataFrame) => TextAnalysis.vocabRichness(d, "text"),
-        docs, "doc_id", Some("text")),
-      ("corpus_freq",
-        (d: DataFrame) => TextAnalysis.corpusFrequencyScore(d, "doc_id", "text"),
-        docs, "doc_id", None),
-      ("tfidf_terms",
-        (d: DataFrame) => TextAnalysis.rarityTopTerms(d, "doc_id", "text", 3),
-        docs, "doc_id", Some("text")),
-      ("bigram_stats",
-        (d: DataFrame) => TextAnalysis.bigramStats(d, "text", 20),
-        docs, "doc_id", Some("text")),
-      ("sessionize",
-        (d: DataFrame) => Events.sessionize(d, 1800L),
-        events, "user_id", None),
-      ("cohort_retention",
-        (d: DataFrame) => Events.cohortRetention(d, 7),
-        events, "user_id", None),
-      ("global_rank",
-        (d: DataFrame) => Samplers.globalRowNumber(
-          d.select("l_orderkey", "l_linenumber", "__copy"),
-          Seq("l_orderkey", "l_linenumber", "__copy")),
-        lineitem.withColumn("__copy", lit(0L)), "__copy", None),
-      ("snapshot_diff",
-        (d: DataFrame) => {
-          val a = d.select(col("o_orderkey"), col("o_totalprice"))
-          val b = a.filter(col("o_orderkey") % 7 =!= 0)
-            .withColumn("o_totalprice",
-              when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 500.0)
-                .otherwise(col("o_totalprice")))
-          Joins.snapshotDiff(a, b, Seq("o_orderkey"), Seq("o_totalprice"))
-            .groupBy(col("status")).agg(count(lit(1)).as("n"))
-        },
-        orders, "o_orderkey", None),
-      ("sq8_stats",
-        (d: DataFrame) => Similarity.sq8Stats(d, "vec_id", "embedding"),
-        embeddings, "vec_id", None),
-      ("pq_codes",
-        // codebook = ids < 4, present only in copy 0 → constant-size
-        // broadcast however large the corpus
-        (d: DataFrame) => Similarity.pqAssign(d, "vec_id", "embedding", 4, 4),
-        embeddings, "vec_id", None),
-      ("domain_mix",
-        (d: DataFrame) => TextAnalysis.domainMix(d, "source", "doc_id",
-          Map("src0" -> 0.25, "src1" -> 0.125), 400L)
-          .groupBy(col("source")).agg(count(lit(1)).as("n")),
-        docs, "doc_id", None),
-      ("semdedup",
-        // rotated copies decorrelate across copies (see replicate): cluster
-        // count grows with the data, cluster size stays bounded → the
-        // within-cluster pair mass scales linearly
-        (d: DataFrame) => Similarity.semDedup(d, "vec_id", "embedding", 0.3),
-        embeddings, "vec_id", Some("embedding")),
-      ("decontaminate_semantic",
-        // bench = every 7th corpus vector verbatim (the worst-case
-        // all-hits workload); centroid count grows with the data so the
-        // within-cell pair mass stays ~n·|bench-per-cell| — the semdedup
-        // shape with a second (dictionary-scale) probe side
-        (d: DataFrame) => graft.scale.Dedup.decontaminateSemantic(d,
-          d.filter(col("vec_id") % 7 === 0)
-            .select(col("vec_id").as("bench_id"), col("embedding")),
-          "vec_id", "bench_id", "embedding", 0.95),
-        embeddings, "vec_id", Some("embedding")),
-      ("unigram_logprob",
-        // UNsalted copies (like bpe_train): salting grew the VOCABULARY N×,
-        // so the r3-r5 ratios measured the replica trick (an N×-wider LM
-        // join dictionary no real corpus produces), not the operator. A
-        // real corpus at N× mass keeps ~the same vocabulary with N× the
-        // frequencies — exactly what unsalted replication models.
-        (d: DataFrame) => TextAnalysis.unigramLogProb(d, "doc_id", "text"),
-        docs, "doc_id", None),
-      ("unigram_lm_train",
-        // UNsalted copies (the unigram_logprob/bpe_train rationale): the
-        // corpus collapses to its word dictionary once, so N× corpus mass
-        // with ~the same vocabulary should leave the EM rounds' cost flat
-        // and the ratio ≈ the collapse scan alone
-        (d: DataFrame) => TextAnalysis.unigramLmTrain(d, "text", 3, 40, 2,
-          0.25, 24),
-        docs, "doc_id", None),
-      ("zorder_stats",
-        (d: DataFrame) => graft.io.ZOrder.fileStats(
-          d.withColumn("x", col("o_custkey") % 1024)
-            .withColumn("y", col("o_orderkey") % 1024),
-          col("x"), col("y"), 10, 4),
-        orders, "o_orderkey", None),
-      ("classifier_score",
-        (d: DataFrame) => TextAnalysis.hashedLinearScore(d, "doc_id", "text"),
-        docs, "doc_id", None),
-      ("rag_retrieve",
-        // salted copies carry no query terms, but every passage still flows
-        // through the window explode + corpus-stats agg being measured
-        (d: DataFrame) => TextAnalysis.ragRetrieve(d, "doc_id", "text",
-          8, 4, Seq("merge", "window"), 15),
-        docs, "doc_id", Some("text")),
-      ("substring_dup",
-        // token prefixes shift every character window → cross-copy shares
-        // vanish; the |chars| explode + postings shuffle is what's timed
-        (d: DataFrame) => Dedup.substringDupPairs(d, "doc_id", "text", 48, 100),
-        docs, "doc_id", Some("text")),
-      ("hard_negatives",
-        // id shift is a multiple of centroidMod → each copy contributes its
-        // own centroids; rotation keeps cells bounded while cell COUNT grows
-        (d: DataFrame) => Similarity.hardNegatives(
-          d, "vec_id", "embedding", "label"),
-        embeddings, "vec_id", Some("embedding")),
-      ("centroid_classify",
-        (d: DataFrame) => Similarity.nearestCentroidConfusion(
-          d, "vec_id", "embedding", "label"),
-        embeddings, "vec_id", Some("embedding")),
-      ("heavy_hitters",
-        (d: DataFrame) => graft.scale.Skew.heavyHitters(
-          d, Seq("user_id", "event_type"), 25),
-        events, "user_id", None),
-      ("triangle_count",
-        // partkeys are re-keyed per copy (copy = orderkey div width) so the
-        // N× graph is N disjoint replicas — same degree structure, N× the
-        // edges — not one graph with N× duplicate (collapsing) edges
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.triangleStats(edges)
-        },
-        lineitem, "l_orderkey", None),
-      ("kcore",
-        // same disjoint-replica re-keying as triangle_count: N independent
-        // copies of the peeling structure, so rounds-to-fixpoint stay
-        // constant while per-round edge mass scales N×
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.kCore(edges, 4)
-        },
-        lineitem, "l_orderkey", None),
-      ("ppr",
-        // disjoint-replica re-keying (as kcore): each copy carries its own
-        // seed nodes, so per-round propagation mass scales N× while the
-        // reachable frontier per seed stays constant
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.personalizedPageRankMicro(edges,
-            edges.select(col("src").as("node")).filter(col("node") % 50 === 0),
-            3)
-        },
-        lineitem, "l_orderkey", None),
-      ("matryoshka_recall",
-        // fixed query set (base copy), candidate corpus N×, 4 truncation
-        // dims: scored mass grows linearly per dim, windows stay k-bounded
-        (d: DataFrame) => Similarity.matryoshkaRecall(
-          d.filter(col("vec_id") % 20 === 0 && col("vec_id") < 10000000L),
-          d, "vec_id", "embedding", Seq(8, 16, 32, 64), 10),
-        embeddings, "vec_id", Some("embedding")),
-      ("incremental_dedup",
-        // id shift is ≡ 0 mod 10 → each copy keeps its 80/20 corpus/incoming
-        // split; salted tokens keep copies' shingle spaces disjoint
-        (d: DataFrame) => Dedup.incrementalDedup(d, "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("markov_transitions",
-        (d: DataFrame) => Events.markovTransitions(d),
-        events, "user_id", None),
-      ("bq_topk",
-        // queries are ids < 5 — only copy 0 has them, so the broadcast side
-        // stays constant while the signature scan grows N×
-        (d: DataFrame) => Similarity.bqTopK(d.filter(col("vec_id") < 5), d,
-          "vec_id", "embedding", 10, 40),
-        embeddings, "vec_id", Some("embedding")),
-      ("ivfpq_topk",
-        // queries are ids < 5 — only copy 0 has them; codes + probe scan
-        // grow N× while the codebook and centroid broadcasts stay bounded
-        (d: DataFrame) => Similarity.ivfPqTopK(d.filter(col("vec_id") < 5),
-          d, "vec_id", "embedding", 10),
-        embeddings, "vec_id", Some("embedding")),
-      ("ivfpq_residual",
-        // the ivfpq_topk shape + one zip_with residual per row riding the
-        // scan; the ADC table grows to |q|·nProbe maps — still broadcast
-        (d: DataFrame) => Similarity.ivfPqResidualTopK(
-          d.filter(col("vec_id") < 5), d, "vec_id", "embedding", 10),
-        embeddings, "vec_id", Some("embedding")),
-      ("opq_permute",
-        // permutation stats are one posexplode hash-agg to the d-row
-        // dictionary; the rotation itself is a codegen'd transform riding
-        // the scan — both linear, the rank window sees d rows only
-        (d: DataFrame) => {
-          val perm = Similarity.opqPermutation(d, "embedding", 4, 64)
-          Similarity.ivfPqTopK(
-            Similarity.opqApply(d.filter(col("vec_id") < 5),
-              "embedding", perm, 64),
-            Similarity.opqApply(d, "embedding", perm, 64),
-            "vec_id", "embedding", 10)
-        },
-        embeddings, "vec_id", Some("embedding")),
-      ("em_ppjoin",
-        // salted tokens make copies' token spaces disjoint → prefix posting
-        // lists and true pair mass both scale linearly, which is exactly the
-        // property the fixed-(brand,size) blocking join lacked
-        (d: DataFrame) => Dedup.ppjoinPairs(
-          d.select(col("p_partkey").as("id"),
-            graft.tasks.Wrangler.emTokens(col("p_name")).as("toks")),
-          "id", "toks", 0.5),
-        part, "p_partkey", Some("p_name")),
-      ("em_ppjoin_03",
-        // the live em_similarity_part/em_end_to_end_part candidate path:
-        // same generator at the LOWER 0.3 candidate threshold (longer
-        // prefixes, bigger posting lists, ~15× the answer mass at sf0.1)
-        (d: DataFrame) => Dedup.ppjoinPairs(
-          d.select(col("p_partkey").as("id"),
-            graft.tasks.Wrangler.emTokens(col("p_name")).as("toks")),
-          "id", "toks", 0.3),
-        part, "p_partkey", Some("p_name")),
-      ("bpe_train",
-        // UNsalted copies: the N× corpus has the SAME vocabulary (N× word
-        // frequencies), so this measures the scale claim directly — only
-        // the one-time corpus→vocab collapse grows with N; every merge
-        // round works on |vocab| rows regardless of corpus size
-        (d: DataFrame) => TextAnalysis.bpeTrain(d, "text"),
-        docs, "doc_id", None),
-      ("classifier_train",
-        // epochs are constant; per-epoch cost is one feats join + two
-        // keyed aggs over the corpus → linear is the expected shape
-        (d: DataFrame) => TextAnalysis.trainHashedLinear(d, "doc_id", "text",
-          array_contains(TextAnalysis.tokens(col("text")), "spark")
-            .cast("long"))._1,
-        docs, "doc_id", None),
-      ("kmv_distinct",
-        // constant-width sketch partials: the exchange carries one ≤64-long
-        // array per (partition, group) however large the input grows
-        (d: DataFrame) => graft.scale.Sketches.kmvDistinct(
-          d.withColumn("__h", graft.scale.HashExprs.md5PrefixLong(
-            col("user_id").cast("string").cast("binary"), 15)),
-          Seq("event_type"), col("__h")),
-        events, "user_id", None),
-      ("hll_distinct",
-        // 64 bytes of state per group with O(1) reduce: the flattest
-        // possible scaling curve for a distinct count
-        (d: DataFrame) => graft.scale.Sketches.hllDistinct(
-          d.withColumn("__h", graft.scale.HashExprs.md5PrefixLong(
-            col("user_id").cast("string").cast("binary"), 15)),
-          Seq("event_type"), col("__h")),
-        events, "user_id", None),
-      ("dsir_select",
-        // LM tables stay 1024 rows at any corpus mass; scoring is one
-        // broadcast join + per-doc agg; selection is a TakeOrdered
-        (d: DataFrame) => TextAnalysis.dsirSelect(
-          d, "doc_id", "text", col("lang") === "en"),
-        docs, "doc_id", Some("text")),
-      ("kcenter_select",
-        // k map-only passes over the persisted quantized projection; the
-        // only non-scan work is a 1-row TakeOrdered per round
-        (d: DataFrame) => Similarity.kcenterSelect(
-          d, "vec_id", "embedding", 8),
-        embeddings, "vec_id", Some("embedding")),
-      ("gram_matrix",
-        // one triangle partial per partition crosses the exchange — the
-        // time curve should track the scan, nothing else
-        (d: DataFrame) => Similarity.gramMatrix(d, "embedding"),
-        embeddings, "vec_id", Some("embedding")),
-      ("doremi_weights",
-        // all reductions run over the (domain, token) count table; only
-        // the one explode+hash-agg pass sees corpus mass
-        (d: DataFrame) => TextAnalysis.doremiWeights(d, "source", "text"),
-        docs, "doc_id", Some("text")),
-      ("cms_counts",
-        // the sketch output is d·w rows at ANY input mass; map-side
-        // partials absorb the heavy keys so the exchange is constant-width
-        (d: DataFrame) => graft.scale.Sketches.cmsBuild(d, col("user_id")),
-        events, "user_id", None),
-      ("phash_pairs",
-        // salted text changes every md5 signature, so copies share no
-        // bands — candidate mass stays linear while the corpus grows N×
-        (d: DataFrame) => graft.scale.Multimodal.phashPairs(
-          graft.scale.Multimodal.fromDocuments(d)),
-        docs, "doc_id", Some("text")),
-      ("kmv_overlap",
-        // the source set is FIXED while the corpus grows: the sketch build
-        // is the only corpus-mass term and the pair matrix is constant
-        (d: DataFrame) => graft.scale.Sketches.kmvPairwiseOverlap(
-          d.select(col("source"),
-            explode(TextAnalysis.tokens(col("text"))).as("__w"))
-            .withColumn("__h", graft.scale.HashExprs.md5PrefixLong(
-              col("__w").cast("binary"), 15)),
-          "source", col("__h")),
-        docs, "doc_id", Some("text")),
-      ("containment_pairs",
-        // same inverted-index frame as jaccard_pairs (salted copies keep
-        // shingle spaces disjoint → pair mass linear in N)
-        (d: DataFrame) => Dedup.ngramContainmentPairs(
-          d, "doc_id", "text", 3, 0.6, 100),
-        docs, "doc_id", Some("text")),
-      ("auc_scores",
-        // corpus work is ONE hash-agg to (lang, score); the θ-join runs
-        // over the bounded distinct-score table, so time tracks the scan
-        (d: DataFrame) => graft.metrics.Metrics.aucExact(
-          d.select(col("doc_id"), col("lang"),
-            array_contains(TextAnalysis.tokens(col("text")), "spark")
-              .cast("long").as("label"))
-            .join(TextAnalysis.hashedLinearScore(d, "doc_id", "text")
-              .select(col("doc_id"), col("w_sum")), Seq("doc_id")),
-          "w_sum", "label", Seq("lang")),
-        docs, "doc_id", None),
-      ("domain_divergence",
-        // one explode+hash-agg sees corpus mass; the vocab×|D| grid joins
-        // on the token key. Unsalted: the vocabulary must stay SHARED
-        // across copies (like bpe_train) or the grid grows with the
-        // replica trick rather than the data
-        (d: DataFrame) => TextAnalysis.domainDivergence(d, "source", "text"),
-        docs, "doc_id", None),
-      ("geo_radius",
-        // fixed query set, corpus densified N×: candidate and answer mass
-        // grow linearly with true spatial density, never corpus²
-        (d: DataFrame) => {
-          val p = d.select(
-            col("p_partkey"),
-            (((col("p_partkey") * 13) % 1200).cast("double") / 20.0 - 30.0)
-              .as("lat"),
-            (((col("p_partkey") * 7) % 7200).cast("double") / 20.0 - 180.0)
-              .as("lon"))
-          graft.scale.Geo.gridRadiusJoin(
-            p.filter(col("p_partkey") % 50 === 0 &&
-              col("p_partkey") < 10000000L),
-            p, "p_partkey", "lat", "lon", 100.0, 1.5)
-        },
-        part, "p_partkey", None),
-      ("ranking_eval",
-        // fixed query set (base copy only), candidate corpus N×: the
-        // broadcast-side stays constant, the scored mass grows linearly,
-        // per-query windows stay k-bounded
-        (d: DataFrame) => {
-          val q = d.filter(col("vec_id") % 20 === 0 &&
-            col("vec_id") < 10000000L)
-          val ranked = Similarity.bruteForceTopK(
-              q, d, "vec_id", "embedding", 10)
-            .join(d.select(col("vec_id").as("query_id"),
-              col("label").as("qlabel")), Seq("query_id"))
-            .join(d.select(col("vec_id").as("cand_id"),
-              col("label").as("clabel")), Seq("cand_id"))
-            .withColumn("rel", (col("qlabel") === col("clabel")).cast("long"))
-          graft.metrics.Metrics.rankingMetrics(
-            ranked, "query_id", "rk", "rel", Seq("qlabel"), 10)
-        },
-        embeddings, "vec_id", Some("embedding")),
-      ("pmi_pairs",
-        // unsalted (shared vocabulary, like domain_divergence): counts
-        // scale N×, the vocab²-bounded bigram table does not
-        (d: DataFrame) => TextAnalysis.pmiTopPairs(d, "text", 5L, 50),
-        docs, "doc_id", None),
-      ("phrase_search",
-        // unsalted so the phrase keeps existing in every copy; postings
-        // are pruned to the 3 phrase tokens before any exchange
-        (d: DataFrame) => TextAnalysis.phraseSearch(
-          d, "doc_id", "text", "slow hash batch"),
-        docs, "doc_id", None),
-      ("chunk_docs",
-        // pure generate+project, no exchange: ratio should track the scan
-        (d: DataFrame) => TextAnalysis.chunkDocuments(
-          d, "doc_id", "text", 64, 48),
-        docs, "doc_id", None),
-      ("oph_pairs",
-        // ONE md5 per shingle; salted copies share no shingles, so band
-        // buckets and verified-pair mass replicate instead of squaring
-        (d: DataFrame) => Dedup.ophMinhashPairs(
-          d, "doc_id", "text", 16, 4, 3, 0.5),
-        docs, "doc_id", Some("text")),
-      ("interval_overlap",
-        // fixed query set, corpus temporally densified N×: per-chunk mass
-        // is the true density, answer mass grows linearly with it
-        (d: DataFrame) => {
-          val o = d.select(col("o_orderkey"),
-              datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
-                .cast("long").as("sd"))
-            .withColumn("ed", col("sd") + col("o_orderkey") % 20)
-          Events.intervalOverlapJoin(
-            o.filter(col("o_orderkey") % 499 === 0 &&
-              col("o_orderkey") < 10000000L),
-            o, "o_orderkey", "o_orderkey", "sd", "ed", 16L)
-            .filter(col("l_id") =!= col("r_id"))
-        },
-        orders, "o_orderkey", None),
-      ("percentiles",
-        // two passes: a histogram hash-agg (bucket-bounded exchange) and a
-        // narrowed re-read of only the target buckets — both linear scans
-        (d: DataFrame) => graft.metrics.Metrics.exactPercentiles(
-          d.withColumn("cents",
-            (col("l_extendedprice").cast("decimal(18,2)") * 100)
-              .cast("long")),
-          "cents", Seq(500000L, 900000L, 990000L), Seq("l_returnflag"), 12),
-        lineitem, "l_orderkey", None),
-      ("edit_pairs",
-        // copies must sit FARTHER than tau from each other or the true
-        // answer mass itself squares (the token salt "c1"/"c2" differs by
-        // ONE char per word — within ed 2 of its twin, so every name
-        // matched 7 counterpart copies and the measured 19× was answer
-        // mass, not the index). A 3-char copy tag derived from the id
-        // keyspace keeps copies >= 3 edits apart: dictionary grows N×,
-        // within-copy structure (and so per-copy answer mass) is constant
-        (d: DataFrame) => Dedup.editDistancePairs(
-          d.withColumn("p_name", concat(
-            expr("repeat(concat('s', p_partkey DIV 10000000), 3)"),
-            col("p_name"))),
-          "p_partkey", "p_name", 2),
-        part, "p_partkey", None),
-      ("boilerplate",
-        // salted tokens keep chunk spaces disjoint → each copy carries its
-        // own boilerplate structure; the df hash-agg and anti join are
-        // what's timed
-        (d: DataFrame) => Dedup.boilerplateScrub(d, "doc_id", "text", 5, 3),
-        docs, "doc_id", Some("text")),
-      ("ks_drift",
-        // unsalted: the distinct-value table stays fixed while counts grow
-        // N× — the real snapshot-drift shape; prefix sums stay
-        // bucket-local at any mass
-        (d: DataFrame) => graft.metrics.Metrics.ksDrift(
-          d.withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
-            .withColumn("side", col("o_orderkey") % 2 === 0),
-          "cents", "side"),
-        orders, "o_orderkey", None),
-      ("token_drift",
-        // unsalted (shared vocabulary, like domain_divergence): one corpus
-        // hash-agg scales N×, the per-token chi-square table does not
-        (d: DataFrame) => TextAnalysis.tokenDrift(
-          d.withColumn("side", col("lang") === "en"), "text", "side", 25),
-        docs, "doc_id", None),
-      ("knn_clusters",
-        // rotated copies decorrelate (see replicate) and the id shift is
-        // centroidMod-aligned, so every copy contributes its own IVF
-        // cells: cell SIZE stays bounded while cell count grows — the
-        // corpus-scale self-kNN generator (a brute/bq shortlist would be
-        // N² on a self-join); clustering is edge-mass CC on top
-        (d: DataFrame) => Similarity.mutualKnnClusters(d,
-          Similarity.ivfTopK(d, d, "vec_id", "embedding", 3, 100),
-          "vec_id"),
-        embeddings, "vec_id", Some("embedding")),
-      ("basket_pairs",
-        // disjoint-replica re-keying (as kcore): items re-key per copy so
-        // baskets replicate instead of merging; pair mass = per-basket
-        // C(size,2), linear in transactions
-        (d: DataFrame) => {
-          val w = 10000000L
-          Baskets.frequentPairs(
-            d.select(col("l_orderkey").as("txn"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("item")),
-            "txn", "item", 2)
-        },
-        lineitem, "l_orderkey", None),
-      ("abc_analysis",
-        // unsalted: the item dictionary stays fixed, revenues sum N× —
-        // one corpus hash-agg + a dictionary-scale window
-        (d: DataFrame) => Baskets.abcAnalysis(
-          d, "l_partkey", "l_extendedprice"),
-        lineitem, "l_orderkey", None),
-      ("heaps_law",
-        // unsalted (shared vocabulary): token mass scales N×, the
-        // first-occurrence table stays vocabulary-bounded
-        (d: DataFrame) => TextAnalysis.heapsLaw(d, "doc_id", "text", 50),
-        docs, "doc_id", None),
-      ("user_entropy",
-        // id shift gives N× users; two hash-aggs, user-mass output
-        (d: DataFrame) => Events.userEntropy(d),
-        events, "user_id", None),
-      ("proportion_test",
-        // one per-user hash-agg then one per-arm conditional hash-agg
-        (d: DataFrame) => graft.metrics.Metrics.proportionZTest(
-          d.groupBy(col("user_id"))
-            .agg(max(when(col("event_type") === "purchase" &&
-              col("value") >= 150.0, 1L).otherwise(0L)).as("__s"))
-            .select((col("user_id") % 3).as("arm"),
-              (col("user_id") % 2 === 0).as("side"),
-              (col("__s") === 1L).as("success")),
-          "success", "side", Seq("arm")),
-        events, "user_id", None),
-      ("ab_test",
-        // one conditional hash-agg; |groups| rows out at any mass
-        (d: DataFrame) => graft.metrics.Metrics.welchTTest(
-          d.withColumn("side", col("user_id") % 2 === 0),
-          "value", "side", Seq("event_type")),
-        events, "user_id", None),
-      ("embedding_drift",
-        // one explode + (dim) hash-agg with map-side partials; d rows out
-        (d: DataFrame) => Similarity.embeddingDrift(
-          d.withColumn("side", col("vec_id") % 2 === 0),
-          "embedding", "side"),
-        embeddings, "vec_id", None),
-      ("rfm",
-        // id shift gives N× users; per-user hash-agg + three
-        // distributed-selection breakpoint passes, all linear scans
-        (d: DataFrame) => Events.rfmSegments(d),
-        events, "user_id", None),
-      ("kaplan_meier",
-        // id shift gives N× users; the per-user hash-agg is the only
-        // corpus-mass stage, the curve stays distinct-duration-scale
-        (d: DataFrame) => Events.kaplanMeier(d,
-          col("event_type") === "purchase" && col("value") >= 150.0),
-        events, "user_id", None),
-      ("link_prediction",
-        // disjoint-replica re-keying (as kcore): N independent copies of
-        // the wedge structure — same degrees, N× the wedge mass
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.linkPrediction(edges, 64, 50)
-        },
-        lineitem, "l_orderkey", None),
-      ("em_snm",
-        // candidate mass is n·(window−1) BY CONSTRUCTION — the flattest
-        // possible pair generator; what's timed is the rank scaffold +
-        // step-bucket equi-join at N× rows
-        (d: DataFrame) => Dedup.snmPairs(
-          d.select(col("p_partkey").as("id"), lower(col("p_name")).as("key")),
-          "id", "key", 8),
-        part, "p_partkey", None),
-      ("bitext_ivf",
-        // rotated copies decorrelate and the 1e7 id shift is ≡ 0 mod 50,
-        // so each copy seeds its own centroids: cell COUNT grows N×, cell
-        // size stays bounded → candidate pair mass linear (the brute
-        // bitext query is the documented |src|·|tgt| baseline and is
-        // deliberately NOT a scalecheck case)
-        (d: DataFrame) => Similarity.bitextMarginIvf(
-          d.filter(col("vec_id") % 2 === 0),
-          d.filter(col("vec_id") % 2 === 1),
-          "vec_id", "embedding", 4, 3, 50, 1),
-        embeddings, "vec_id", Some("embedding")),
-      ("keyword_tags",
-        // unsalted so the dictionary phrases keep existing in every copy
-        // (phrase_search's rule); corpus tokens matching no dictionary
-        // token drop at the broadcast join, so aggregate state is
-        // hit-scale, not corpus-scale
-        (d: DataFrame) => TextAnalysis.tagKeywords(d, "doc_id", "text",
-          Seq("hash join", "table scan", "sort merge join", "slow query",
-            "data stream", "vector", "fast filter", "group agg")),
-        docs, "doc_id", None),
-      ("fd_violations",
-        // unsalted: the (lhs, rhs) group dictionary stays fixed while
-        // counts grow N× — two partial-agg-friendly hash-aggs + a fold
-        // per FD, the flattest profiling shape
-        (d: DataFrame) => graft.metrics.Metrics.fdViolations(d, Seq(
-          ("custkey->priority", Seq("o_custkey"), "o_orderpriority"),
-          ("orderdate->status", Seq("o_orderdate"), "o_orderstatus"),
-          ("priority->status", Seq("o_orderpriority"), "o_orderstatus"))),
-        orders, "o_orderkey", None),
-      ("bfs_hops",
-        // disjoint-replica re-keying (as kcore): each copy carries its own
-        // mod-50 seeds, so per-round frontier mass scales N× while hop
-        // rounds stay constant
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.bfsHops(edges,
-            edges.select(col("src").as("node"))
-              .filter(col("node") % 50 === 0), 3)
-        },
-        lineitem, "l_orderkey", None),
-      ("modularity",
-        // disjoint-replica re-keying; community map is node-mass keyed on
-        // node, the two community hash-aggs are edge-mass — all linear
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.modularity(edges,
-            edges.select(col("src").as("node")).distinct()
-              .withColumn("community", col("node") % 25))
-        },
-        lineitem, "l_orderkey", None),
-      ("char_entropy",
-        // per-doc alphabets are tiny, so the (id, char) partials collapse
-        // hard map-side; both aggs key on the doc — pure linear scans
-        (d: DataFrame) => TextAnalysis.charEntropy(d, "doc_id", "text"),
-        docs, "doc_id", None),
-      ("bigram_perplexity",
-        // unsalted (shared vocabulary, like pmi_pairs): the count tables
-        // stay vocab²-bounded while the scored bigram stream grows N×
-        (d: DataFrame) => TextAnalysis.bigramPerplexity(d, "doc_id", "text"),
-        docs, "doc_id", None),
-      ("unimax_mix",
-        // ONE corpus hash-agg; the waterfall runs on the 5-row language
-        // dictionary — time should track the token-count scan alone
-        (d: DataFrame) => TextAnalysis.unimaxAllocate(d, "lang", "text",
-          600000L, 3),
-        docs, "doc_id", None),
-      ("lpa",
-        // disjoint-replica re-keying (as kcore): rounds constant, per-
-        // round message mass = edge mass — 3 keyed shuffles at N×
-        (d: DataFrame) => {
-          val w = 10000000L
-          val hi = d.filter(col("l_quantity") >= 35.0)
-            .select(col("l_orderkey").as("k"),
-              expr(s"l_partkey + (l_orderkey DIV $w) * $w").as("p"))
-          val edges = hi.join(hi.select(col("k"), col("p").as("p2")), Seq("k"))
-            .filter(col("p") =!= col("p2"))
-            .select(col("p").as("src"), col("p2").as("dst"))
-          graft.scale.Graph.labelPropagation(edges, 3)
-        },
-        lineitem, "l_orderkey", None),
-      ("em_fs",
-        // SNM candidates (n·7 mass) + one 1-row stats broadcast + a
-        // linear scoring scan — the whole decision layer stays linear
-        (d: DataFrame) => {
-          val attrs = d.select(col("p_partkey").as("id"),
-            graft.tasks.Wrangler.emTokens(col("p_name")).as("toks"),
-            col("p_brand"), col("p_type"), col("p_size"))
-          val pairs = Dedup.snmPairs(
-              d.select(col("p_partkey").as("id"),
-                lower(col("p_name")).as("key")), "id", "key", 8)
-            .join(attrs.select(col("id").as("id_a"),
-              col("toks").as("__ka"), col("p_brand").as("__ba"),
-              col("p_type").as("__ta"), col("p_size").as("__sa")),
-              Seq("id_a"))
-            .join(attrs.select(col("id").as("id_b"),
-              col("toks").as("__kb"), col("p_brand").as("__bb"),
-              col("p_type").as("__tb"), col("p_size").as("__sb")),
-              Seq("id_b"))
-            .select(col("id_a"), col("id_b"),
-              (col("__ba") === col("__bb")).as("brand_eq"),
-              (abs(col("__sa") - col("__sb")) <= 1).as("size_close"),
-              (graft.tasks.Wrangler.tokenJaccardArrays(
-                col("__ka"), col("__kb")) >= 0.5).as("name_sim"),
-              (col("__ta") === col("__tb")).as("gold"))
-          Dedup.fellegiSunterScore(pairs,
-            Seq("brand_eq", "size_close", "name_sim"), "gold")
-        },
-        part, "p_partkey", None),
-      ("benford",
-        // one 2-way explode + two hash-aggs over the 9-digit dictionary —
-        // tracks the scan
-        (d: DataFrame) => graft.metrics.Metrics.benfordDigits(
-          d.select(col("o_custkey"),
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-              .as("price_cents")),
-          Seq("o_custkey", "price_cents")),
-        orders, "o_orderkey", None),
-      ("mad_outliers",
-        // two bucket-histogram selection passes + one conditional
-        // hash-agg; no group ever materializes in an agg buffer (the
-        // interpolated medianAbsoluteDeviation form would)
-        (d: DataFrame) => graft.metrics.Metrics.madOutliers(
-          d.withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long")),
-          "cents", Seq("event_type"), 3),
-        events, "user_id", None),
-      ("assoc_panel",
-        // one 3-way explode + one cell hash-agg; marginals/fold run on
-        // the pinned cell dictionary — tracks the scan
-        (d: DataFrame) => graft.metrics.Metrics.assocPanel(
-          d.withColumn("mon", month(col("o_orderdate")))
-            .withColumn("band",
-              expr("cast(cast(o_totalprice as decimal(18,2)) * 100 " +
-                "as bigint) div 5000000")),
-          Seq(("priority_month", "o_orderpriority", "mon"),
-            ("status_band", "o_orderstatus", "band"),
-            ("status_priority", "o_orderstatus", "o_orderpriority"))),
-        orders, "o_orderkey", None),
-      ("cohens_kappa",
-        // one corpus hash-agg to the (group, a, b) cell dictionary; the
-        // pe join and fold run at dictionary scale
-        (d: DataFrame) => graft.metrics.Metrics.cohensKappa(
-          d.withColumn("cents",
-              (col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .withColumn("rater_a",
-              when(col("cents") >= 15000, "hi")
-                .when(col("cents") >= 5000, "mid").otherwise("lo"))
-            .withColumn("pert",
-              col("cents") + (col("event_id") % 21 - 10) * 100)
-            .withColumn("rater_b",
-              when(col("pert") >= 15000, "hi")
-                .when(col("pert") >= 5000, "mid").otherwise("lo")),
-          "rater_a", "rater_b", Seq("event_type")),
-        events, "event_id", None),
-      ("skew_profile",
-        // one corpus hash-agg to key masses, one to the mass histogram;
-        // gini/top10/percentiles run on the pinned histogram
-        (d: DataFrame) => graft.metrics.Metrics.skewProfile(
-          d, Seq("user_id"), 32),
-        events, "event_id", None),
-      ("domain_stats",
-        // pure string algebra per row (the one matched suffix branch runs
-        // its regex), then ONE hash-agg on the short domain key; the
-        // distinct-page state carries md5 fingerprints, never URL bytes
-        (d: DataFrame) => Dedup.domainStats(
-          d.select(col("doc_id"),
-            length(col("text")).cast("long").as("mass"),
-            concat(lit("https://h"), (col("doc_id") % 97).cast("string"),
-              lit(".example.co.uk/p/"),
-              (col("doc_id") % 1000).cast("string")).as("url")),
-          "doc_id", "url", "mass"),
-        docs, "doc_id", None),
-      ("quantile_effect",
-        // one corpus scan explodes 33 Poisson weights and hash-aggs to
-        // the per-(type, side, rep) value dictionaries; rank windows and
-        // the delta panel run at dictionary scale
-        (d: DataFrame) => graft.metrics.Metrics.quantileTreatmentEffect(
-          d.select(col("event_type"),
-            (col("user_id") % 2 === 0).as("side"),
-            col("value"), col("event_id")),
-          "value", "side", "event_id", Seq("event_type")),
-        events, "event_id", None),
-      ("online_fdr",
-        // corpus mass = ONE conditional moment hash-agg (the mSPRT
-        // panel); the LORD fixed-point walk runs on the drained
-        // hypothesis dictionary with rejection ranks as plan literals
-        (d: DataFrame) => graft.metrics.Metrics.onlineFdrLord(
-          graft.metrics.Metrics.sequentialAbTest(
-            d.select(col("event_type"),
-              (col("user_id") % 7).as("segment"),
-              (col("user_id") % 2 === 0).as("side"),
-              (col("value") + when((col("user_id") % 7) < 2 &&
-                col("user_id") % 2 === 0, lit(40.0))
-                .otherwise(lit(0.0))).as("value")),
-            "value", "side", Seq("event_type", "segment")),
-          Seq("event_type", "segment"), "p_always"),
-        events, "event_id", None),
-      ("calibration",
-        // ONE conditional hash-agg to the (group, bin) dictionary;
-        // ECE/MCE algebra + join-back at dictionary scale
-        (d: DataFrame) => graft.metrics.Metrics.expectedCalibrationError(
-          d.select(col("event_type"),
-            ((col("event_id") % 97) / lit(96.0)).as("score"),
-            (col("user_id") % 5 < 3).as("correct")),
-          "score", "correct", Seq("event_type")),
-        events, "event_id", None),
-      ("post_strat",
-        // ONE stratum-keyed conditional decimal hash-agg, then the
-        // micro-quantized cross-strata roll-up at dictionary scale
-        (d: DataFrame) => graft.metrics.Metrics.postStratifiedDelta(
-          d.select((col("user_id") % 3).as("arm"), col("event_type"),
-            (col("user_id") % 2 === 0).as("side"),
-            (col("value") + when(col("user_id") % 2 === 0, lit(2.0))
-              .otherwise(lit(0.0))).as("value")),
-          "value", "side", "event_type", Seq("arm")),
-        events, "event_id", None),
-      ("pack_sequences",
-        // one globalCumSum scaffold pass + a narrow sequence() explode;
-        // output mass = token mass / contextLen + one row per doc
-        (d: DataFrame) => graft.scale.TextAnalysis.packSequences(
-          d.select(col("doc_id"),
-            graft.scale.TextAnalysis.tokenCount(col("text"))
-              .as("n_tokens")),
-          "doc_id", "n_tokens", 256L),
-        docs, "doc_id", None),
-      ("dbscan",
-        // block-bounded pair mass + degree hash-agg + core-only CC
-        (d: DataFrame) => Similarity.dbscanClusters(
-          d, "vec_id", "embedding", 0.15, 3),
-        embeddings, "vec_id", Some("embedding")),
-      ("corr_matrix",
-        // one 4-way explode + one decimal-moment hash-agg
-        (d: DataFrame) => graft.metrics.Metrics.corrMatrix(d, Seq(
-          ("qty_price", "l_quantity", "l_extendedprice"),
-          ("qty_discount", "l_quantity", "l_discount"),
-          ("price_tax", "l_extendedprice", "l_tax"),
-          ("discount_tax", "l_discount", "l_tax"))),
-        lineitem, "l_orderkey", None),
-      ("conformance",
-        // one 2-way explode (regex inside the struct) + one hash-agg
-        (d: DataFrame) => graft.metrics.Metrics.conformanceProfile(d, Seq(
-          ("name_format", "c_name", "^Customer#[0-9]+$"),
-          ("name_digits_only", "c_name", "^[0-9]+$"))),
-        customer, "c_custkey", None),
-      ("woe_iv",
-        // one conditional hash-agg to the bin dictionary + 1-row totals
-        (d: DataFrame) => graft.metrics.Metrics.woeIv(
-          d.withColumn("label",
-              col("event_type") === "purchase" && col("value") >= 150.0)
-            .withColumn("bin",
-              expr("cast(cast(value as decimal(18,2)) * 100 as bigint)" +
-                " div 5000")),
-          "label", "bin"),
-        events, "event_id", None),
-      ("seasonality",
-        // one hash-agg to the (type, hour) dictionary + totals fold
-        (d: DataFrame) => graft.scale.Events.seasonalityIndex(d),
-        events, "event_id", None),
-      ("l_diversity",
-        // one (class, sensitive) cell hash-agg + class-dictionary fold
-        (d: DataFrame) => graft.metrics.Metrics.lDiversity(
-          d.withColumn("bal_band",
-            expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
-              " div 100000")),
-          Seq("c_nationkey", "c_mktsegment"), "bal_band", Seq(2, 3, 5)),
-        customer, "c_custkey", None),
-      ("acf",
-        // one corpus hash-agg to the (type, day) dictionary; scaffold,
-        // lag explode, and self-join all live on that dictionary
-        (d: DataFrame) => Events.acf(d, 7),
-        events, "event_id", None),
-      ("ari",
-        // identical contingency shape to bcubed; the pair counting is
-        // algebra on the dictionary, never pairs
-        (d: DataFrame) => Dedup.adjustedRandIndex(
-          d.withColumn("p", expr("doc_id div 3"))
-            .withColumn("g", expr("doc_id div 5")),
-          "doc_id", "p", "g"),
-        docs, "doc_id", Some("text")),
-      ("bcubed",
-        // ONE corpus hash-agg to the (pred, gold) contingency dictionary;
-        // marginal folds on the dictionary (pred/gold derived cheaply so
-        // the row times the EVAL fold, not a clustering run)
-        (d: DataFrame) => Dedup.bCubed(
-          d.withColumn("p", expr("doc_id div 3"))
-            .withColumn("g", expr("doc_id div 5")),
-          "doc_id", "p", "g"),
-        docs, "doc_id", Some("text")),
-      ("rrf_hybrid",
-        // each ranker is its own top-k machinery (corpus scan + TakeOrdered
-        // / broadcast-query pair scan); fusion touches <= sum-of-k rows
-        (d: DataFrame) => {
-          val lex = TextAnalysis.bm25TopK(d, "doc_id", "text",
-              Seq("join", "vector", "stream"), 50)
-            .select(col("doc_id"), col("score"))
-          val vec = Similarity.bruteForceTopK(
-              embeddings.filter(col("vec_id") === 0), embeddings,
-              "vec_id", "embedding", 50)
-            .select(col("cand_id").as("doc_id"), col("cos_sim").as("score"))
-          Similarity.rrfFuse(Seq(("lex", lex), ("vec", vec)),
-            "doc_id", "score")
-        },
-        docs, "doc_id", Some("text")),
-      ("fleiss_kappa",
-        // ONE corpus hash-agg to the joint rating-profile dictionary
-        // (<= 27 rows for 3 raters x 3 cats); the kappa fold never
-        // touches corpus mass
-        (d: DataFrame) => graft.metrics.Metrics.fleissKappa(
-          d.withColumn("r1",
-            when(col("n_chars") < 200, "lo")
-              .when(col("n_chars") < 800, "mid").otherwise("hi"))
-            .withColumn("r2",
-              when(col("doc_id") % 3 === 0, "lo")
-                .when(col("doc_id") % 3 === 1, "mid").otherwise("hi"))
-            .withColumn("r3",
-              when(col("n_chars") % 7 < 3, "lo")
-                .when(col("n_chars") % 7 < 5, "mid").otherwise("hi")),
-          Seq("r1", "r2", "r3")),
-        docs, "doc_id", Some("text")),
-      ("stupid_backoff",
-        // count tables are vocab-bounded hash-aggs; scoring mass flows
-        // through keyed equi-joins only — the bigramPerplexity contract
-        // with one more level
-        (d: DataFrame) => TextAnalysis.stupidBackoffScore(
-          d, "doc_id", "text", col("doc_id") % 5 =!= 0),
-        docs, "doc_id", Some("text")),
-      ("audio_dup",
-        // signature mass is corpus-row-scale; the banded join's candidate
-        // mass is collision-bounded, never all-pairs
-        (d: DataFrame) => graft.scale.Multimodal.audioDupPairs(
-          graft.scale.Multimodal.fromDocuments(d)),
-        docs, "doc_id", Some("text")),
-      ("shot_bounds",
-        // one decode pass, per-row frame walk, no shuffle
-        (d: DataFrame) => graft.scale.Multimodal.shotBoundaries(
-          graft.scale.Multimodal.fromDocuments(d)),
-        docs, "doc_id", Some("text")),
-      ("audio_stats",
-        // one decode pass, stats per-row, no shuffle at all — the curve
-        // should track the scan
-        (d: DataFrame) => graft.scale.Multimodal.audioStats(
-          graft.scale.Multimodal.fromDocuments(d)),
-        docs, "doc_id", Some("text")),
-      ("krippendorff",
-        // same ONE-hash-agg profile-dictionary shape as fleiss_kappa;
-        // the missing-tolerant fold adds no corpus-mass step
-        (d: DataFrame) => graft.metrics.Metrics.krippendorffAlpha(
-          d.withColumn("r1",
-            when(col("n_chars") < 200, "lo")
-              .when(col("n_chars") < 800, "mid").otherwise("hi"))
-            .withColumn("r2",
-              when(col("doc_id") % 11 === 0, lit(null).cast("string"))
-                .when(col("doc_id") % 3 === 0, "lo")
-                .when(col("doc_id") % 3 === 1, "mid").otherwise("hi"))
-            .withColumn("r3",
-              when(col("doc_id") % 7 === 0, lit(null).cast("string"))
-                .when(col("n_chars") % 5 < 2, "lo")
-                .when(col("n_chars") % 5 < 4, "mid").otherwise("hi")),
-          Seq("r1", "r2", "r3")),
-        docs, "doc_id", Some("text")),
-      ("locf_fill",
-        // one corpus hash-agg to the (type, day) dictionary; spine,
-        // max-day pick and value join all dictionary-scale
-        (d: DataFrame) => Events.locfDaily(d),
-        events, "event_id", None),
-      ("mann_kendall",
-        // one corpus hash-agg to the same (type, day) dictionary; the
-        // pair θ-join, tie fold and median pick never touch corpus mass
-        (d: DataFrame) => Events.mannKendall(d),
-        events, "event_id", None),
-      ("bootstrap_ci",
-        // 2B associative sums in ONE aggregation over one pass — the
-        // replicate table is B rows whatever the corpus mass
-        (d: DataFrame) => graft.sample.Samplers.poissonBootstrap(
-          d.withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
-          "o_orderkey", "cents", 32),
-        orders, "o_orderkey", None),
-      ("brier_panel",
-        // ONE corpus hash-agg to the 10-bin dictionary; Murphy folds on
-        // <= nBins rows
-        (d: DataFrame) => {
-          val scored = TextAnalysis.hashedLinearScore(d, "doc_id", "text")
-            .join(d.select(col("doc_id"),
-              (col("lang") === "en").cast("long").as("y")), Seq("doc_id"))
-            .withColumn("pnum",
-              col("w_sum") + lit(1000L) * col("n_tokens"))
-            .withColumn("pden", lit(2000L) * col("n_tokens"))
-          graft.metrics.Metrics.brierPanel(scored, "pnum", "pden", "y", 10)
-        },
-        docs, "doc_id", Some("text")),
-      ("qq_drift",
-        // unsalted: bucket histograms per side are value-domain-scale;
-        // the rank picks never sort the corpus
-        (d: DataFrame) => graft.metrics.Metrics.qqDrift(
-          d.withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
-            .withColumn("side", col("o_orderkey") % 2 === 0),
-          "cents", "side",
-          Seq(100000L, 500000L, 900000L, 990000L)),
-        orders, "o_orderkey", None),
-      ("power_advisor",
-        // ONE moment hash-agg; the delta scaffold explodes on the
-        // group dictionary
-        (d: DataFrame) => graft.metrics.Metrics.powerAdvisor(
-          d.withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long")),
-          "cents", Seq("event_type"), Seq(0.01, 0.02, 0.05)),
-        events, "event_id", None),
-      ("mann_whitney",
-        // unsalted (shared value dictionary, the ks_drift shape): the
-        // corpus hash-agg scales N×, the rank fold does not
-        (d: DataFrame) => graft.metrics.Metrics.mannWhitneyU(
-          d.withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .withColumn("side", col("event_type") === "purchase"),
-          "cents", "side"),
-        events, "event_id", None),
-      ("priority_sample",
-        // projection + TakeOrderedAndProject head + one corpus aggregate
-        // — the weightedReservoir shape plus the exact-total companion
-        (d: DataFrame) => graft.sample.Samplers.prioritySample(
-          d.withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
-          "o_orderkey", "cents", 500),
-        orders, "o_orderkey", None),
-      ("sample_quantiles",
-        // dictionary count + hash pre-cut (≈4k rows per group reach the
-        // rank window) + one graded corpus pass — linear, O(k) sample state
-        (d: DataFrame) => graft.sample.Samplers.sampleQuantiles(
-          d.withColumn("rid", concat(col("l_orderkey").cast("string"),
-              lit("-"), col("l_linenumber").cast("string")))
-            .withColumn("cents",
-              (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long")),
-          "rid", "cents", Seq(250000L, 500000L, 900000L),
-          Seq("l_returnflag"), 1000, 50000L),
-        lineitem, "l_orderkey", None),
-      ("t_closeness",
-        // one (class, value) cell hash-agg + dictionary-scale scaffold fold
-        (d: DataFrame) => graft.metrics.Metrics.tCloseness(
-          d.withColumn("bal_band",
-            expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)" +
-              " div 100000")),
-          Seq("c_nationkey", "c_mktsegment"), "bal_band",
-          Seq(150000L, 250000L, 500000L)),
-        customer, "c_custkey", None),
-      ("blocking_quality",
-        // two pair-distinct aggs + one pair-keyed hit join; pair mass is
-        // the blockers', not the operator's. Blocking keys carry the
-        // copy index (the saltTextCol principle): without it the copies
-        // SHARE brand/size keys and candidate mass grows quadratically
-        // in N — a fixture artifact, not the measured scaling (12.0 →
-        // measured below with per-copy keys)
-        (d: DataFrame) => {
-          val p = d.select(col("p_partkey").as("id"),
-            concat(col("p_brand"), lit("#"),
-              expr("p_partkey div 10000000")).as("p_brand"),
-            concat(col("p_type"), lit("#"),
-              expr("p_partkey div 10000000")).as("p_type"),
-            col("p_size"))
-          val cand = p.select(col("id").as("id_a"), col("p_brand"),
-              col("p_size"))
-            .join(p.select(col("id").as("id_b"), col("p_brand"),
-              col("p_size")), Seq("p_brand", "p_size"))
-            .filter(col("id_a") < col("id_b"))
-          val gold = p.select(col("id").as("id_a"), col("p_type"),
-              col("p_size"))
-            .join(p.select(col("id").as("id_b"), col("p_type"),
-              col("p_size")), Seq("p_type", "p_size"))
-            .filter(col("id_a") < col("id_b"))
-          Dedup.blockingQuality(cand, gold, p)
-        },
-        part, "p_partkey", None),
-      ("ess",
-        // one decimal-moment aggregate
-        (d: DataFrame) => graft.metrics.Metrics.effectiveSampleSize(
-          d, "n_chars"),
-        docs, "doc_id", None),
-      ("neyman",
-        // one corpus hash-agg to the stratum dictionary + withRank
-        (d: DataFrame) => graft.sample.Samplers.neymanAllocation(
-          d.withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100)
-              .cast("long")),
-          "o_orderpriority", "cents", 1000L),
-        orders, "o_orderkey", None),
-      ("rbo",
-        // candidate side scales 8x; the brute ranking is the documented
-        // exact baseline, the IVF side cell-probes
-        (d: DataFrame) => {
-          val q = d.filter(col("vec_id") < 5)
-          Similarity.rankBiasedOverlap(
-            Similarity.bruteForceTopK(q, d, "vec_id", "embedding", 10),
-            Similarity.ivfTopK(q, d, "vec_id", "embedding", 10, 100), 10)
-        },
-        embeddings, "vec_id", Some("embedding")),
-      ("joinability",
-        // per table: explode + distinct (column-dictionary mass); one
-        // value-keyed join with |colsA|·|colsB|-bounded fan-out
-        (d: DataFrame) => graft.metrics.Metrics.joinability(
-          d, Seq("l_orderkey", "l_partkey", "l_suppkey"),
-          orders, Seq("o_orderkey", "o_custkey")),
-        lineitem, "l_orderkey", None),
-      ("ri_profile",
-        // per edge: two key-dictionary hash-aggs + one full-outer
-        // dictionary join; corpora never meet row-to-row
-        (d: DataFrame) => graft.metrics.Metrics.riProfile(Seq(
-          ("orderkey->orders", d, "l_orderkey",
-            orders, "o_orderkey"))),
-        lineitem, "l_orderkey", None),
-      ("survivorship",
-        // one cell explode + two dictionary aggs + one cluster-keyed join
-        (d: DataFrame) => Dedup.survivorship(
-          d.withColumn("cluster", expr("c_custkey div 3")),
-          "cluster",
-          Seq(("c_name", "longest"), ("c_mktsegment", "mode"))),
-        customer, "c_custkey", None),
-      ("cusum_changepoint",
-        // one corpus hash-agg to the (type, day) dictionary; cumsum +
-        // argmax run over the dictionary only
-        (d: DataFrame) => graft.scale.Events.cusumChangepoint(d),
-        events, "event_id", None),
-      ("kll_quantiles",
-        // one corpus hash-agg to the value dictionary; compaction + picks
-        // run at dictionary scale (key-shifted copies multiply counts,
-        // not distinct values — n grows, the dictionary doesn't)
-        (d: DataFrame) => graft.scale.Sketches.kllQuantiles(
-          d.withColumn("cents",
-            (col("l_extendedprice").cast("decimal(18,2)") * 100)
-              .cast("long")),
-          "cents", 1024, Seq((1, 100), (50, 100), (99, 100))),
-        lineitem, "l_orderkey", None),
-      ("isotonic_calibration",
-        // one corpus hash-agg to the <=nBins dictionary; the minimax
-        // interval relation + dominance anti-joins are nBins^3-bounded
-        (d: DataFrame) => graft.metrics.Metrics.isotonicCalibration(
-          graft.scale.TextAnalysis.hashedLinearScore(d, "doc_id", "text")
-            .join(d.select(col("doc_id"),
-              (col("lang") === "en").cast("long").as("y")), Seq("doc_id"))
-            .withColumn("pnum", col("w_sum") + lit(1000L) * col("n_tokens"))
-            .withColumn("pden", lit(2000L) * col("n_tokens")),
-          "pnum", "pden", "y", 10),
-        docs, "doc_id", None),
-      ("phonetic_block",
-        // corpus -> distinct-name dictionary in one hash-agg; block join
-        // + lev verify run at dictionary scale keyed on the code
-        (d: DataFrame) => graft.scale.Dedup.phoneticBlockPairs(
-          d, "p_name", 2),
-        part, "p_partkey", None),
-      ("kll_quantiles_by",
-        // per-group dictionary window + per-(group, block) fold; the
-        // group count is fixed, so only the first hash-agg scales
-        (d: DataFrame) => graft.scale.Sketches.kllQuantilesBy(
-          d.withColumn("cents",
-            (col("l_extendedprice").cast("decimal(18,2)") * 100)
-              .cast("long")),
-          "cents", Seq("l_returnflag"), 1024,
-          Seq((1, 100), (50, 100), (99, 100))),
-        lineitem, "l_orderkey", None),
-      ("video_dup_clusters",
-        // videoDupPairs edges + pointer-jumped CC over the video nodes;
-        // edge mass is dup-rate-bounded, rounds O(log diameter)
-        (d: DataFrame) => {
-          val base = d.select(col("doc_id"), col("text"))
-          val echo = base.filter(col("doc_id") % 13 === 0)
-            .withColumn("doc_id", col("doc_id") + lit(999999999L))
-          val media = graft.scale.Multimodal
-            .fromDocuments(base.unionByName(echo))
-          graft.scale.Dedup.duplicateClusters(
-            media.filter(col("meta.kind") === "video").select(col("doc_id")),
-            graft.scale.Multimodal.videoDupPairs(media)
-              .select(col("id_a"), col("id_b")),
-            "doc_id")
-        },
-        docs, "doc_id", Some("text")),
-      ("bradley_terry",
-        // one corpus hash-agg to the <=N^2 pair dictionary; the 3 MM
-        // rounds join/agg that dictionary only (key-shifted copies add
-        // matches between the SAME 12 players — dictionary stays fixed)
-        (d: DataFrame) => graft.scale.Preference.bradleyTerryMicro(
-          d.select(expr("event_id % 12").as("pa"),
-              expr("(event_id div 12) % 12").as("pb"),
-              expr("user_id % 10").as("ock"))
-            .withColumn("oc",
-              when(col("ock") === 0, lit(2))
-                .when(col("ock") <= 6,
-                  when(col("pa") < col("pb"), lit(0)).otherwise(lit(1)))
-                .otherwise(
-                  when(col("pa") > col("pb"), lit(0)).otherwise(lit(1)))),
-          "pa", "pb", "oc", 3),
-        events, "event_id", None),
-      ("bootstrap_bradley_terry",
-        // map-local replicate explode combines to the (rep x pair)
-        // dictionary before the exchange; all 32 fits run as one
-        // rep-keyed dictionary job
-        (d: DataFrame) => graft.scale.Preference.bradleyTerryBootstrap(
-          d.select(col("event_id").as("mid"),
-              expr("event_id % 12").as("pa"),
-              expr("(event_id div 12) % 12").as("pb"),
-              expr("user_id % 10").as("ock"))
-            .withColumn("oc",
-              when(col("ock") === 0, lit(2))
-                .when(col("ock") <= 6,
-                  when(col("pa") < col("pb"), lit(0)).otherwise(lit(1)))
-                .otherwise(
-                  when(col("pa") > col("pb"), lit(0)).otherwise(lit(1)))),
-          "pa", "pb", "oc", "mid", 32, 3),
-        events, "event_id", None),
-      ("plackett_luce",
-        // one corpus hash-agg to the ordered-triple dictionary; the MM
-        // rounds explode/join/agg that dictionary only
-        (d: DataFrame) => graft.scale.Preference.plackettLuceMicro(
-          d.select(expr("event_id % 12").as("x"),
-              expr("(event_id div 12) % 12").as("y"),
-              expr("(event_id div 144) % 12").as("z"),
-              expr("user_id % 10").as("k"))
-            .filter(col("x") =!= col("y") && col("x") =!= col("z") &&
-              col("y") =!= col("z"))
-            .withColumn("a", least(col("x"), col("y"), col("z")))
-            .withColumn("c", greatest(col("x"), col("y"), col("z")))
-            .withColumn("b",
-              col("x") + col("y") + col("z") - col("a") - col("c"))
-            .selectExpr(
-              "CASE WHEN k <= 5 THEN a WHEN k <= 7 THEN b ELSE c END AS f",
-              "CASE WHEN k <= 4 THEN b WHEN k = 5 THEN c " +
-                "WHEN k = 6 THEN a WHEN k = 7 THEN c WHEN k = 8 THEN a " +
-                "ELSE b END AS s",
-              "CASE WHEN k <= 4 THEN c WHEN k = 5 THEN b " +
-                "WHEN k = 6 THEN c WHEN k = 7 THEN a WHEN k = 8 THEN b " +
-                "ELSE a END AS t3"),
-          "f", "s", "t3", 3),
-        events, "event_id", None),
-      ("majority_cycles",
-        // one corpus hash-agg to the pair dictionary; the triad census is
-        // a dictionary^3-bounded self-join (players fixed at 12)
-        (d: DataFrame) => graft.scale.Preference.majorityCycles(
-          d.select(col("event_id").as("mid"),
-              expr("event_id % 12").as("pa"),
-              expr("(event_id div 12) % 12").as("pb"),
-              expr("user_id % 10").as("ock"))
-            .withColumn("oc",
-              when(col("ock") === 0, lit(2))
-                .when(col("ock") <= 6,
-                  when(col("pa") < col("pb"), lit(0)).otherwise(lit(1)))
-                .otherwise(
-                  when(col("pa") > col("pb"), lit(0)).otherwise(lit(1)))),
-          "pa", "pb", "oc"),
-        events, "event_id", None),
-      ("copeland",
-        // the bradley_terry first-agg shape minus the MM rounds: one
-        // corpus hash-agg to the pair dictionary + two dictionary folds
-        (d: DataFrame) => graft.scale.Preference.copelandPanel(
-          d.select(expr("event_id % 12").as("pa"),
-              expr("(event_id div 12) % 12").as("pb"),
-              expr("user_id % 10").as("ock"))
-            .withColumn("oc",
-              when(col("ock") === 0, lit(2))
-                .when(col("ock") <= 6,
-                  when(col("pa") < col("pb"), lit(0)).otherwise(lit(1)))
-                .otherwise(
-                  when(col("pa") > col("pb"), lit(0)).otherwise(lit(1)))),
-          "pa", "pb", "oc"),
-        events, "event_id", None),
-      ("key_candidates",
-        // one 3-way explode + tuple-class hash-agg + per-combo fold
-        (d: DataFrame) => graft.metrics.Metrics.keyCandidates(d, Seq(
-          ("orderkey", Seq("o_orderkey")),
-          ("custkey", Seq("o_custkey")),
-          ("cust_date", Seq("o_custkey", "o_orderdate")))),
-        orders, "o_orderkey", None),
-      ("hits",
-        // two exact-integer rounds: per round two keyed joins + two
-        // hash-aggs; edges/nodes pinned once, one end normalization
-        (d: DataFrame) => {
-          val pairs = d.select(col("l_suppkey").as("src"),
-            (col("l_orderkey") % 100000L + 10000000L).as("dst"))
-          graft.scale.Graph.hits(pairs, 2)
-        },
-        lineitem, "l_orderkey", None),
-      ("join_cardinality",
-        // two key-histogram hash-aggs + one dictionary join + 1-row fold
-        (d: DataFrame) => graft.scale.Skew.joinCardinality(
-          d, "l_partkey", d, "l_partkey"),
-        lineitem, "l_orderkey", None),
-      ("curation_ledger",
-        // the five pipeline stages plus one accounting anti-join per
-        // stage; the roll-up output is ≤6 rows however large the corpus
-        (d: DataFrame) => graft.scale.Curation.ledgerMass(
-          graft.scale.Curation.ledger(d, "doc_id", "text", "source",
-            20, 20, Map("src0" -> 0.25, "src1" -> 0.125), 200L)),
-        docs, "doc_id", Some("text")),
-      ("clip_align",
-        // keyed 1:1 join + fixed-shape cosine — tracks the scan, no pair
-        // explosion
-        (d: DataFrame) => graft.scale.Multimodal.alignmentScore(
-          d.filter(col("vec_id") % 2 === 0)
-            .select(expr("vec_id div 2").as("pair_id"), col("embedding")),
-          d.filter(col("vec_id") % 2 === 1)
-            .select(expr("vec_id div 2").as("pair_id"), col("embedding")),
-          "pair_id", "embedding", 280000L),
-        embeddings, "vec_id", None),
-      ("image_quality",
-        // pure map stage: one decode pass per row, zero shuffle
-        (d: DataFrame) => graft.scale.Multimodal.imageQuality(
-          graft.scale.Multimodal.fromDocuments(
-            d.select(col("doc_id"), col("text")))),
-        docs, "doc_id", None),
-      ("sequential_ab",
-        // one map-side-combined conditional hash-agg to |groups| rows;
-        // the mSPRT algebra is per-row on the drained state
-        (d: DataFrame) => graft.metrics.Metrics.sequentialAbTest(
-          d.withColumn("side", col("user_id") % 2 === 0),
-          "value", "side", Seq("event_type")),
-        events, "event_id", None),
-      ("langid_trained",
-        // bounded-prefix char-gram features (first 120 chars per doc,
-        // so feature mass per doc is CONSTANT in doc length) through
-        // the per-epoch keyed-aggregation trainer
-        (d: DataFrame) => graft.scale.TextAnalysis.langIdTrained(
-          d, "doc_id", "text",
-          col("doc_id") % 5 === 0, col("doc_id") % 5 === 0,
-          epochs = 2),
-        docs, "doc_id", Some("text")),
-      ("conformal_mondrian",
-        // the conformal_classifier shape + a per-class dictionary rank
-        // (range-partitioned cumulative, 2-row offset fold)
-        (d: DataFrame) => graft.scale.TextAnalysis.conformalMondrian(
-          d, "doc_id", "text",
-          expr("CAST(array_contains(filter(split(lower(text), " +
-            "'\\\\s+'), x -> length(x) > 0), 'spark') AS LONG)"),
-          epochs = 2),
-        docs, "doc_id", Some("text")),
-      ("line_density",
-        // one per-line metric-struct explode (lambda binds the token
-        // array once) + one doc-key hash-agg — corpus-linear
-        (d: DataFrame) => graft.scale.TextAnalysis.lineDensityFilter(
-          d.select(col("doc_id"),
-            concat_ws("\n", graft.scale.TextAnalysis
-              .wordChunks(col("text"), 8)).as("text")),
-          "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("url_dedup",
-        // pure-expression canonicalization + ONE hash-agg on the
-        // canonical key — the cheapest dedup pass by construction
-        (d: DataFrame) => graft.scale.Dedup.urlDedup(
-          d.select(col("doc_id"), concat(
-            lit("https://example.com/page/"),
-            (col("doc_id") % 1000000L).cast("string"),
-            lit("?utm_source=x")).as("url")),
-          "doc_id", "url"),
-        docs, "doc_id", None),
-      ("fdr_bh",
-        // the hypothesis table is |groups|-sized; the corpus mass is
-        // the one conditional moment hash-agg feeding it
-        (d: DataFrame) => graft.metrics.Metrics.benjaminiHochberg(
-          graft.metrics.Metrics.sequentialAbTest(
-            d.select(col("event_type"),
-              (col("user_id") % 7).as("segment"),
-              (col("user_id") % 2 === 0).as("side"), col("value")),
-            "value", "side", Seq("event_type", "segment")),
-          Seq("event_type", "segment"), "p_always"),
-        events, "event_id", None),
-      ("ratio_delta",
-        // twelve conditional decimal moment sums in ONE hash-agg; the
-        // delta-method algebra is per-|groups|-row
-        (d: DataFrame) => graft.metrics.Metrics.ratioMetricDelta(
-          d.select((col("user_id") % 3).as("arm"),
-            (col("user_id") % 2 === 0).as("side"),
-            when(col("event_type") === "purchase", col("value"))
-              .otherwise(lit(0.0)).as("x"),
-            when(col("event_type") === "click", lit(1.0))
-              .otherwise(lit(0.0)).as("y")),
-          "x", "y", "side", Seq("arm")),
-        events, "event_id", None),
-      ("srm_guard",
-        // two conditional long sums per arm (one hash-agg), chi-square
-        // per |arms| dictionary row
-        (d: DataFrame) => graft.metrics.Metrics.srmGuard(
-          d.select((col("user_id") % 3).as("arm"),
-            (col("user_id") % 2 === 0).as("side")),
-          "side", Seq("arm")),
-        events, "event_id", None),
-      ("rank_centrality",
-        // the bradley_terry first-agg shape; the walk rounds join/agg
-        // the <=2N^2 edge dictionary only (players fixed at 12)
-        (d: DataFrame) => graft.scale.Preference.rankCentralityMicro(
-          d.select(expr("event_id % 12").as("pa"),
-              expr("(event_id div 12) % 12").as("pb"),
-              expr("user_id % 10").as("ock"))
-            .withColumn("oc",
-              when(col("ock") === 0, lit(2))
-                .when(col("ock") <= 6,
-                  when(col("pa") < col("pb"), lit(0)).otherwise(lit(1)))
-                .otherwise(
-                  when(col("pa") > col("pb"), lit(0)).otherwise(lit(1)))),
-          "pa", "pb", "oc", 3),
-        events, "event_id", None),
-      ("pii_checksums",
-        // extract + explode + per-candidate integer fold: shuffle-free
-        // projection, linear in corpus bytes
-        (d: DataFrame) => graft.scale.TextAnalysis.piiChecksums(
-          d.select(col("doc_id"),
-            concat(col("text"),
-              when(col("doc_id") % 3 === 1,
-                lit(" card 4532015112830366"))
-                .when(col("doc_id") % 3 === 2,
-                  lit(" pay GB82WEST12345698765432"))
-                .otherwise(lit(""))).as("tx")),
-          "doc_id", "tx"),
-        docs, "doc_id", None),
-      ("wordpiece_train",
-        // corpus collapses to its vocabulary ONCE; rounds are two
-        // |vocab|-scale hash-aggs + a 1-row TakeOrdered each (key-shifted
-        // copies multiply freqs, the vocab dictionary stays fixed)
-        (d: DataFrame) => graft.scale.TextAnalysis.wordpieceTrain(
-          d, "text", 4),
-        docs, "doc_id", None),
-      ("conformal_classifier",
-        // trainer epochs on the train split (keyed aggs) + one feature
-        // hash-agg per split + a dictionary-scale order statistic + a
-        // 1-row coverage fold
-        (d: DataFrame) => graft.scale.TextAnalysis.conformalClassifier(
-          d, "doc_id", "text",
-          array_contains(graft.scale.TextAnalysis.tokens(col("text")),
-            "spark").cast("long"), 9, 10, 4),
-        docs, "doc_id", None),
-      ("cuped",
-        // one unit-keyed hash-agg + one map-side-combined 1-row moment
-        // fold; the panel algebra is constant work
-        (d: DataFrame) => graft.scale.Events.cuped(d, 19738L),
-        events, "event_id", None),
-      ("pr_curve",
-        // one corpus hash-agg to the score dictionary + one dictionary
-        // range pass (cumulative TP); output is dictionary-sized
-        (d: DataFrame) => {
-          val scored = graft.scale.TextAnalysis
-            .hashedLinearScore(d, "doc_id", "text")
-            .join(d.select(col("doc_id"),
-              array_contains(graft.scale.TextAnalysis.tokens(col("text")),
-                "spark").cast("long").as("y")), Seq("doc_id"))
-          graft.metrics.Metrics.prCurve(scored, "w_sum", "y")
-        },
-        docs, "doc_id", None),
-      ("conformal_regression",
-        // one scan to exact residuals + a dictionary order statistic +
-        // a 1-row coverage fold
-        (d: DataFrame) => graft.metrics.Metrics.conformalRegression(
-          d.withColumn("pred",
-            graft.scale.TextAnalysis.tokenCount(col("text"))
-              .cast("long") * 6L),
-          "doc_id", "n_chars", "pred"),
-        docs, "doc_id", None),
-      ("pass_at_k",
-        // one corpus hash-agg to the task dictionary; the k-fold product
-        // runs per dictionary row (97 tasks however large the corpus)
-        (d: DataFrame) => graft.scale.Eval.passAtK(
-          d.select(expr("event_id % 97").as("task"),
-            (col("event_type") === "purchase" && col("value") >= 120.0)
-              .as("ok")),
-          "task", "ok", Seq(1, 5, 10)),
-        events, "event_id", None),
-      ("rouge2",
-        // two gram dictionaries + one (key, gram) equi-join + per-key
-        // fold — corpus-linear, no pair mass
-        (d: DataFrame) => graft.scale.Eval.rougeN(
-          d.select(col("doc_id"), expr(
-            "concat_ws(' ', slice(filter(split(lower(text), '\\\\s+'), " +
-              "x -> length(x) > 0), 1, 12))").as("text")),
-          d.select(col("doc_id"), col("text")),
-          "doc_id", "text", 2),
-        docs, "doc_id", Some("text")),
-      ("js_divergence",
-        // one tagged-union hash-agg to the union-vocab dictionary + a
-        // 1-row broadcast + an associative micro-long fold
-        (d: DataFrame) => graft.scale.TextAnalysis.jsDivergence(
-          d.filter(col("lang") === "en"),
-          d.filter(col("lang") =!= "en"), "text"),
-        docs, "doc_id", Some("text")),
-      ("simpson",
-        // one explode + two hash-aggs, dictionary-scale after the
-        // token collapse
-        (d: DataFrame) => graft.scale.TextAnalysis.simpsonDiversity(
-          d, "source", "text"),
-        docs, "doc_id", Some("text")),
-      ("chrf",
-        // the rouge2 shape with char grams: two dictionaries + one
-        // (key, gram) equi-join — corpus-linear
-        (d: DataFrame) => graft.scale.Eval.chrF(
-          d.select(col("doc_id"), expr(
-            "concat_ws(' ', slice(filter(split(lower(text), '\\\\s+'), " +
-              "x -> length(x) > 0), 1, 12))").as("text")),
-          d.select(col("doc_id"), col("text")),
-          "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("wer",
-        // per-pair relabeling encode + codegen levenshtein — pure map
-        // over the pair join, O(|cand|*|ref|) per row, no extra shuffle
-        (d: DataFrame) => graft.scale.Eval.wer(
-          d.select(col("doc_id"), expr(
-            "concat_ws(' ', slice(filter(split(lower(text), '\\\\s+'), " +
-              "x -> length(x) > 0), 1, 12))").as("text")),
-          d.select(col("doc_id"), col("text")),
-          "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("bleu",
-        // 4 word-gram sizes -> one (key, n, gram) dictionary per side +
-        // ONE keyed equi-join + conditional-sum pivot — corpus-linear
-        (d: DataFrame) => graft.scale.Eval.bleu(
-          d.select(col("doc_id"), expr(
-            "concat_ws(' ', slice(filter(split(lower(text), '\\\\s+'), " +
-              "x -> length(x) > 0), 1, 12))").as("text")),
-          d.select(col("doc_id"), col("text")),
-          "doc_id", "text"),
-        docs, "doc_id", Some("text")),
-      ("bleu_paired_bootstrap",
-        // two count dictionaries (the only corpus-mass jobs, pinned
-        // once) + a map-local 32-replicate explode that combines to 32
-        // rows — the panel cost is ~2x bleu's gram mass, corpus-linear
-        (d: DataFrame) => {
-          def prefix(k: Int) = d.select(col("doc_id"), expr(
-            "concat_ws(' ', slice(filter(split(lower(text), '\\\\s+'), " +
-              s"x -> length(x) > 0), 1, $k))").as("text"))
-          graft.scale.Eval.bleuPairedBootstrap(prefix(12), prefix(6),
-            d.select(col("doc_id"), col("text")), "doc_id", "text")
-        },
-        docs, "doc_id", Some("text")))
-
-    // warm-up
-    noop(Dedup.passageDedup(docs, "doc_id", "text", 10))
-
-    // optional args: case-name filter (local iteration aid)
-    val only = if (args.nonEmpty) Some(args.toSet) else None
-    val results = cases
-      .filter { case (name, _, _, _, _) => only.forall(_.contains(name)) }
-      .map { case (name, op, base, idCol, salt) =>
-      val big = replicate(base, idCol, n, salt)
-      val t1 = time(noop(op(base)))
-      val tn = time(noop(op(big)))
+    val errors1, errorsN: Bench.Errors = mutable.TreeMap()
+    Bench.warmUp(spark, sfDir, errors1)
+    val results = names.map { q =>
+      val t1 = Bench.run(spark, sfDir, q, errors1)
+      val tn = Bench.run(spark, bigDir.toString, q, errorsN)
       val ratio = tn / t1
-      println(f"[scalecheck] $name%-14s 1x=$t1%6.2fs  ${n}x=$tn%6.2fs  " +
+      println(f"[scalecheck] $q%-40s 1x=$t1%6.2fs  ${n}x=$tn%6.2fs  " +
         f"ratio=$ratio%5.2f (data ${n}x)")
-      (name, t1, tn, ratio)
+      (q, t1, tn, ratio)
     }
     val qs = results.map { case (k, a, b, r) =>
       s"""\"$k\":{\"t1\":$a,\"tn\":$b,\"ratio\":$r}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"scalecheck","n":$n,"cases":$qs,"sf":"$sfDir"}""")
+    val detail = Bench.errorsDetail(
+      errors1 ++ errorsN.map { case (k, v) => s"$k@${n}x" -> v })
+    println(s"""{"metric":"scalecheck","n":$n,"cases":$qs,"errors_detail":$detail,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -12,21 +11,13 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, f) => (a, b, Some(f.split(",").map(_.trim).toSet))
+      case _ => throw new IllegalArgumentException(
+        "usage: graft.Verify <sfDir> <outDir> [comma-separated query names]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // Clean the output dir FIRST: a stale per-query directory from a
     // previous run would otherwise be validated as if current — a broken
     // query could false-PASS against yesterday's output.
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     rm(new java.io.File(outDir))
     new java.io.File(outDir).mkdirs()
     var failures = List.empty[String]
@@ -52,6 +43,11 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Deletes a file or a directory tree. */
+  private[graft] def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
   }
 
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)

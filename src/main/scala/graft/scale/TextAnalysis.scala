@@ -1702,7 +1702,7 @@ object TextAnalysis {
       epochs: Int = 8, nBuckets: Int = 1024): (DataFrame, Array[Long]) =
     trainHashedLinearFromFeatures(
       // NOT repartitioned by doc before the checkpoint (probed r15,
-      // ProbeTrainer): under AQE the checkpoint's LogicalRDD reports
+      // OPTIMIZATION_r15.md §8b): under AQE the checkpoint's LogicalRDD reports
       // UnknownPartitioning, so a pre-checkpoint hash partitioning is
       // INVISIBLE to the per-epoch groupBy(doc) planner — the epoch
       // exchange stays either way and the repartition only adds a

@@ -165,16 +165,9 @@ object WranglerCli {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    // getOrCreate attaches to an active session when one exists (tests);
-    // standalone runs get a local session sized by the environment
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // runs inside an existing session unchanged (tests); standalone runs
+    // get a local session sized by the environment
+    val spark = graft.Session.local(graft.Session.cpus)
     val (results, metrics) = run(spark, a)
     println(s"[wrangler] ${results.size} tasks -> ${a.outputDir}/metrics.json")
     metrics.toSeq.sortBy(_._1).foreach { case (k, v) =>

@@ -1,11 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.Session
 
 /** Dev tool: dump `.explain("formatted")` of named queries to files —
   * the plans/r14/<query>_{before,after}.txt evidence the optimization
   * rounds commit. Run:
   * `sbt "runMain graft.tools.ExplainDump <outDir> <suffix> q1 q2 ..."`
+  * on a `local[SPARK_GRAFT_CPUS]` session (default: every core).
   * Streaming queries (readStream lineages) cannot be explained without
   * starting them; for those the tool writes the physical plan of the
   * BATCH result table lineage instead (post-drain fold), which is what
@@ -18,13 +21,7 @@ object ExplainDump {
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {
@@ -35,8 +32,9 @@ object ExplainDump {
           java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), plan)
         println(s"[explain] wrote ${n}_$suffix.txt (${plan.length} chars)")
       } catch {
-        case e: Throwable =>
-          println(s"[explain] $n FAILED: ${e.getMessage.take(200)}")
+        case NonFatal(e) =>
+          println(s"[explain] $n FAILED: ${e.getClass.getName}: " +
+            String.valueOf(e.getMessage).take(200))
       }
     }
     spark.stop()

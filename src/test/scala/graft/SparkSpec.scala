@@ -5,26 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide SparkSession). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
-  // getOrCreate sets the thread-local active session only on the FIRST
-  // thread to force the shared lazy val; suites running on other pool
-  // threads would otherwise plan with getActiveSession = None, and any
-  // plan constructed outside withActive (e.g. eager localCheckpoint's
-  // resetMetrics over GenerateExec) NPEs on SparkPlan.session. Pin the
-  // active session on whichever thread runs this suite.
+  // Building the session makes it active only on the FIRST thread to
+  // force the shared lazy val; suites running on other pool threads would
+  // otherwise plan with getActiveSession = None, and any plan constructed
+  // outside withActive (e.g. eager localCheckpoint's resetMetrics over
+  // GenerateExec) NPEs on SparkPlan.session. Pin the active session on
+  // whichever thread runs this suite.
   lazy val spark: SparkSession = {
     val s = TestSpark.spark
     SparkSession.setActiveSession(s)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 import graft.tasks.WranglerCli
 
 /** End-to-end CLI coverage: fixture dataset directories in each of the four
@@ -10,6 +12,10 @@ import graft.tasks.WranglerCli
   * files land with the expected content.
   */
 class WranglerCliSpec extends SparkSpec {
+
+  // main() runs inside a live session unchanged: build the shared one
+  // before any test calls main, so main never builds its own
+  private val shared = spark
 
   private def write(path: String, content: String): Unit = {
     val p = Paths.get(path)
@@ -109,6 +115,23 @@ class WranglerCliSpec extends SparkSpec {
     // num_run caps the evaluated test rows: total = tp+tn+fp+fn = 10
     assert(m.contains("headcase_pairs.txt_total\": 10.0"),
       s"num_run cap not applied: $m")
+  }
+
+  test("main runs inside the active session without changing its confs") {
+    val session = shared.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "7")
+    val previous = SparkSession.getActiveSession
+    SparkSession.setActiveSession(session)
+    try {
+      val base = tmp("graft_cli")
+      val dataDir = s"$base/headcase"
+      write(s"$dataDir/pairs.txt",
+        (1 to 12).map(i => s"v $i\t\tV $i").mkString("\n"))
+      WranglerCli.main(Array(
+        "--data_dir", dataDir, "--output_dir", s"$base/out"))
+      assert(session.conf.get("spark.sql.shuffle.partitions") == "7")
+    } finally previous.fold(SparkSession.clearActiveSession())(
+      SparkSession.setActiveSession)
   }
 
   test("parse rejects unknown flags and requires data_dir") {
