@@ -2511,15 +2511,20 @@ object SparkEntry {
     // Clip values to the group's [p05, p95] before summing — the standard
     // outlier guard before training-metric aggregation. Boundary table is
     // one row per group, broadcast back (quantileBin's shape); sums are
-    // decimal-exact.
+    // decimal-exact. The values are whole cents, so the bounds are rounded
+    // to cents first as round(p·100)/100 (half away from zero on the IEEE
+    // product, the same in DuckDB): casting an off-cent bound such as
+    // 150.02499999999998 straight to DECIMAL rounds it to 150.02 here and
+    // to 150.03 in DuckDB.
     "winsorize_events" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val bounds = ev.groupBy(col("event_type")).agg(
         expr("percentile(value, 0.05D)").as("p05"),
         expr("percentile(value, 0.95D)").as("p95"))
+      def cents(c: Column): Column = round(c * 100) / 100
       ev.join(broadcast(bounds), Seq("event_type"))
-        .withColumn("__cv",
-          least(greatest(col("value"), col("p05")), col("p95")))
+        .withColumn("__cv", least(greatest(col("value"), cents(col("p05"))),
+          cents(col("p95"))))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           round(min(col("p05")), 6).as("p05"),
@@ -12193,7 +12198,8 @@ object SparkEntry {
         |  FROM events GROUP BY 1),
         |c AS (
         |  SELECT e.event_type, e.value,
-        |    LEAST(GREATEST(e.value, b.p05), b.p95) AS cv, b.p05, b.p95
+        |    LEAST(GREATEST(e.value, round(b.p05 * 100) / 100),
+        |      round(b.p95 * 100) / 100) AS cv, b.p05, b.p95
         |  FROM events e JOIN bounds b ON e.event_type = b.event_type)
         |SELECT event_type, COUNT(*) AS n,
         |  ROUND(MIN(p05), 6) AS p05, ROUND(MIN(p95), 6) AS p95,

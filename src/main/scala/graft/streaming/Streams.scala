@@ -152,8 +152,8 @@ object Streams {
   }
 
   /** Run a streaming DataFrame to completion against a memory sink under a
-    * fresh unique name and return the collected result table (test/dev
-    * harness; production would
+    * fresh unique name and return the collected result table, leaving no
+    * temp view behind (test/dev harness; production would
     * `writeStream.format("parquet").option("checkpointLocation", …)`).
     *
     * STATE-PARTITION SIZING: state-store commit cost is per
@@ -204,7 +204,12 @@ object Streams {
       } finally spark.conf.set(ShufflePartitions, prev)
     }
     try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    // The memory sink registers `name` as a temp view holding all its rows.
+    // The returned frame keeps its analyzed plan over the sink, so the view
+    // is dropped here rather than left in the catalog after every drain.
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"

@@ -39,6 +39,16 @@ class StreamingSpec extends SparkSpec {
       (3600L, "click", 1L, 4.0)))
   }
 
+  test("runToMemory drops its sink view; the returned frame still collects") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Ev]
+    in.addData(Ev(t(0), 1, "click", 1.0), Ev(t(60), 2, "buy", 2.0))
+    val out = Streams.runToMemory(spark, in.toDF().select($"user_id"))
+    val views = spark.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.startsWith("stream_")), views.mkString(", "))
+    assert(out.as[Long].collect().sorted.toSeq === Seq(1L, 2L))
+  }
+
   test("Append-mode hourly agg: watermark emits exactly the closed " +
       "windows and EVICTS their state (final state = open frontier)") {
     import graft.io.Tables

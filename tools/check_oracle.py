@@ -19,12 +19,18 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 
+def is_null(v) -> bool:
+    return v is None or (isinstance(v, (float, np.floating)) and pd.isna(v))
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
-    # normalize dtypes for compare
+    # normalize dtypes for compare. A NULL in an object column reads as NaN
+    # from DuckDB's .df() and as None from pyarrow; give both one token
+    # before the string cast, or they become 'nan' and 'None'.
     for c in df.columns:
         if df[c].dtype == object:
-            df[c] = df[c].astype(str)
+            df[c] = df[c].map(lambda v: "NULL" if is_null(v) else v).astype(str)
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
@@ -37,7 +43,7 @@ def strict_repr(df: pd.DataFrame) -> list:
     for row in df.itertuples(index=False):
         cells = []
         for v in row:
-            if v is None or (isinstance(v, (float, np.floating)) and pd.isna(v)):
+            if is_null(v):
                 cells.append("NULL")
             elif isinstance(v, (float, np.floating)):
                 cells.append(repr(float(v)))
@@ -49,6 +55,35 @@ def strict_repr(df: pd.DataFrame) -> list:
                 cells.append(str(v))
         out.append("|".join(cells))
     return out
+
+
+def compare(got: pd.DataFrame, want: pd.DataFrame) -> list:
+    """Compares canonicalized Spark output `got` with DuckDB's `want`.
+    Returns the failure's lines, the first one the reason; empty on a match."""
+    if list(got.columns) != list(want.columns):
+        return [f"columns {list(got.columns)} vs {list(want.columns)}"]
+    if len(got) != len(want):
+        return [f"rows {len(got)} vs {len(want)}"]
+    try:
+        pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                      check_exact=True)
+    except AssertionError as e:
+        lines = [str(e).splitlines()[-1][:300]]
+        # show the first diff
+        neq = (got != want) & ~(got.isna() & want.isna())
+        bad = neq.any(axis=1)
+        if bad.any():
+            i = bad.idxmax()
+            lines += [f"first diff row {i}:",
+                      f"spark : {got.loc[i].to_dict()}",
+                      f"duckdb: {want.loc[i].to_dict()}"]
+        return lines
+    sg, sw = strict_repr(got), strict_repr(want)
+    if sg != sw:
+        bad = next(i for i, (a, b) in enumerate(zip(sg, sw)) if a != b)
+        return ["strict-hash mismatch (dtype drift?)",
+                f"spark : {sg[bad][:220]}", f"duckdb: {sw[bad][:220]}"]
+    return []
 
 
 def main(out_dir: str, sf_dir: str, only: str | None = None) -> int:
@@ -81,38 +116,15 @@ def main(out_dir: str, sf_dir: str, only: str | None = None) -> int:
             print(f"ERROR {name}: {e}")
             n_fail += 1
             continue
-        if list(got.columns) != list(want.columns):
-            print(f"FAIL  {name}: columns {list(got.columns)} vs {list(want.columns)}")
+        failure = compare(got, want)
+        if failure:
+            print(f"FAIL  {name}: {failure[0]}")
+            for line in failure[1:]:
+                print(f"      {line}")
             n_fail += 1
-            continue
-        if len(got) != len(want):
-            print(f"FAIL  {name}: rows {len(got)} vs {len(want)}")
-            n_fail += 1
-            continue
-        try:
-            pd.testing.assert_frame_equal(got, want, check_dtype=False,
-                                          check_exact=True)
-            sg, sw = strict_repr(got), strict_repr(want)
-            if sg != sw:
-                bad = next(i for i, (a, b) in enumerate(zip(sg, sw)) if a != b)
-                print(f"FAIL  {name}: strict-hash mismatch (dtype drift?)")
-                print(f"      spark : {sg[bad][:220]}")
-                print(f"      duckdb: {sw[bad][:220]}")
-                n_fail += 1
-                continue
+        else:
             print(f"PASS  {name} ({len(got)} rows)")
             n_pass += 1
-        except AssertionError as e:
-            print(f"FAIL  {name}: {str(e).splitlines()[-1][:300]}")
-            # show first few diffs
-            neq = (got != want) & ~(got.isna() & want.isna())
-            bad = neq.any(axis=1)
-            if bad.any():
-                i = bad.idxmax()
-                print(f"      first diff row {i}:")
-                print("      spark :", got.loc[i].to_dict())
-                print("      duckdb:", want.loc[i].to_dict())
-            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
     return 1 if n_fail else 0
 
