@@ -17,13 +17,6 @@ object TaskKind {
   case object DataImputation extends TaskKind("data_imputation")
   case object ErrorDetection extends TaskKind("error_detection_spelling")
   case object DataTransformation extends TaskKind("data_transformation")
-
-  val all: Seq[TaskKind] =
-    Seq(EntityMatching, DataImputation, ErrorDetection, DataTransformation)
-
-  def fromName(n: String): TaskKind =
-    all.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"Unknown task: $n"))
 }
 
 /** Engine configuration. Defaults mirror the reference CLI defaults

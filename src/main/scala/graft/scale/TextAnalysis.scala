@@ -173,9 +173,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "que", "pour"),
     "zh" -> Seq("de5", "shi4", "bu4"))
 
-  def langScore(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => array_contains(lit(markers.toArray), t)))
-
   def languageId(df: DataFrame, textCol: String): DataFrame = {
     // Everything — tokenize, the 5 marker scans, argmax, tiebreak — happens
     // inside one singleton-array lambda chain, so the tokenization and the

@@ -5,8 +5,9 @@ import scala.util.control.NonFatal
 import graft.Session
 
 /** Dev tool: dump `.explain("formatted")` of named queries to files —
-  * the plans/r14/<query>_{before,after}.txt evidence the optimization
-  * rounds commit. Run:
+  * the <query>_{before,after}.txt plan evidence of the optimization
+  * rounds (their plans/r14 and plans/r15 dumps are in commit 44bfac3).
+  * Run:
   * `sbt "runMain graft.tools.ExplainDump <outDir> <suffix> q1 q2 ..."`
   * on a `local[SPARK_GRAFT_CPUS]` session (default: every core).
   * Streaming queries (readStream lineages) cannot be explained without

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.registry.QuerySpec
+
 /** Guards the query registry itself — the one failure mode the oracle gate
   * cannot see is a query that silently VANISHES from the map (a duplicate
   * key in a `Map(...)` literal keeps the last binding; this shadowed
@@ -34,5 +36,18 @@ class RegistrySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("duplicate spec keys"))
     assert(e.getMessage.contains("k"))
+  }
+
+  test("a name declared in two families fails when the registry is built") {
+    def spec(name: String) =
+      QuerySpec(name, (s, _) => s.emptyDataFrame, s"SELECT '$name'")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.registry(Seq(
+        Seq(spec("only_a"), spec("twice")),
+        Seq(spec("twice"), spec("only_b"))))
+    }
+    assert(e.getMessage.contains("duplicate queries keys"))
+    assert(e.getMessage.contains("twice"))
+    assert(!e.getMessage.contains("only_"))
   }
 }
