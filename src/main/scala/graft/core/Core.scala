@@ -39,7 +39,6 @@ final case class WranglerConfig(
     numTrials: Int = 1,
     numIter: Int = 1,
     depth: Int = 5,                  // repair-loop cap
-    legacyF1: Boolean = true,        // f1 = 2pr / max(1, p+r)  (utils.py:127)
     truncatingZip: Boolean = true    // tolerance compare truncates to shorter list
 )
 

@@ -29,12 +29,6 @@ object Metrics {
   def normalize(c: Column): Column =
     lower(trim(coalesce(c.cast("string"), lit("")), " \t\n\r\f\u000B"))
 
-  /** Corrected-mode pattern with the fraction branch FIRST, so "1/2"
-    * actually matches as a fraction (see the dead-code note below).
-    */
-  val NumberPatternFractionsFirst: String =
-    "[-+]?([0-9]+/[0-9]+|[0-9]*\\.?[0-9]+)"
-
   /** F4 — extract all numbers from a string as an array<double>. Sign
     * dropped (see [[NumberPattern]]).
     *
@@ -45,17 +39,10 @@ object Metrics {
     * CPython). Java regex alternation behaves identically, so this
     * implementation reproduces the reference exactly: fractions decompose
     * into two numbers. The `contains("/")` branch is kept for structural
-    * fidelity and for [[extractNumbersCorrected]], where it is reachable.
+    * fidelity.
     */
-  def extractNumbers(c: Column): Column =
-    extractWith(c, NumberPattern)
-
-  /** Corrected mode: fractions really evaluate ("1/2" → 0.5). */
-  def extractNumbersCorrected(c: Column): Column =
-    extractWith(c, NumberPatternFractionsFirst)
-
-  private def extractWith(c: Column, pattern: String): Column = {
-    val matches = regexp_extract_all(c, lit(pattern), lit(1))
+  def extractNumbers(c: Column): Column = {
+    val matches = regexp_extract_all(c, lit(NumberPattern), lit(1))
     transform(matches, m =>
       when(m.contains("/"),
         element_at(split(m, "/"), 1).cast("double") /
@@ -130,30 +117,8 @@ object Metrics {
       predCol: String,
       goldCol: String,
       tol: Double = 0.021,
-      truncating: Boolean = true): DataFrame = {
-    val crc = tolerantEquals(col(predCol), col(goldCol), tol, truncating)
-    val g = normalize(col(goldCol))
-    val cnt = (p: Column) => sum(when(p, 1L).otherwise(0L))
-    df.agg(
-        count(lit(1)).as("total"),
-        cnt(crc).as("crc"),
-        cnt(g === "yes" && crc).as("tp"),
-        cnt(g === "yes" && !crc).as("fn"),
-        cnt(g === "no" && crc).as("tn"),
-        cnt(g === "no" && !crc).as("fp"))
-      .withColumn("prec", round(
-        col("tp").cast("double") / greatest(lit(1L), col("tp") + col("fp")), 6))
-      .withColumn("rec", round(
-        col("tp").cast("double") / greatest(lit(1L), col("tp") + col("fn")), 6))
-      .withColumn("acc", round(col("crc").cast("double") / col("total"), 6))
-      .withColumn("f1_legacy", round(
-        lit(2.0) * col("prec") * col("rec") /
-          greatest(lit(1.0), col("prec") + col("rec")), 6))
-      .withColumn("f1", round(
-        when(col("prec") + col("rec") > 0.0,
-          lit(2.0) * col("prec") * col("rec") / (col("prec") + col("rec")))
-          .otherwise(lit(0.0)), 6))
-  }
+      truncating: Boolean = true): DataFrame =
+    confusion(df, predCol, goldCol, None, tol, truncating)
 
   /** [[confusionMetrics]] over a PRE-AGGREGATED (pred, gold, weight)
     * class-distribution table — the 100 TB shape for massive pair
@@ -162,7 +127,8 @@ object Metrics {
     * and the tolerant-equality expression — regex extraction per
     * evaluation, the cost term at pair mass — runs once per CLASS instead
     * of once per row. Identical output to row-level [[confusionMetrics]]
-    * because crc depends only on the (pred, gold) values.
+    * because crc depends only on the (pred, gold) values — except on an
+    * empty input, where `total` is NULL here (a sum) and 0 there (a count).
     */
   def confusionMetricsWeighted(
       classes: DataFrame,
@@ -170,13 +136,27 @@ object Metrics {
       goldCol: String,
       weightCol: String,
       tol: Double = 0.021,
-      truncating: Boolean = true): DataFrame = {
+      truncating: Boolean = true): DataFrame =
+    confusion(classes, predCol, goldCol, Some(col(weightCol)), tol, truncating)
+
+  /** The one G4 body: every row counts `weight`, or 1 when there is none. */
+  private def confusion(
+      df: DataFrame,
+      predCol: String,
+      goldCol: String,
+      weight: Option[Column],
+      tol: Double,
+      truncating: Boolean): DataFrame = {
     val crc = tolerantEquals(col(predCol), col(goldCol), tol, truncating)
     val g = normalize(col(goldCol))
-    val w = col(weightCol)
+    // row-level total stays a count: 0, not a sum's NULL, on an empty input
+    val (total, w) = weight match {
+      case Some(c) => (sum(c), c)
+      case None    => (count(lit(1)), lit(1L))
+    }
     val cnt = (p: Column) => sum(when(p, w).otherwise(0L))
-    classes.agg(
-        sum(w).as("total"),
+    df.agg(
+        total.as("total"),
         cnt(crc).as("crc"),
         cnt(g === "yes" && crc).as("tp"),
         cnt(g === "yes" && !crc).as("fn"),

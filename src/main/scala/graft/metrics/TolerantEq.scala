@@ -15,6 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * JVM function — normalize, one regex scan per side with a precompiled
   * pattern, pairwise tolerance. Semantics identical to the expression-tree
   * form in [[Metrics.tolerantEqualsColumns]] (cross-checked in MetricsSpec).
+  * The engine's only JVM copy: the codegen'd metric calls the `UTF8String`
+  * entry, driver-side validation of candidate programs
+  * ([[graft.transform.Validation]]) the `String` one.
   */
 object TolerantEq {
   // Reference regex (`utils/utils.py:49`); findall group-1 semantics drop the
@@ -38,9 +41,14 @@ object TolerantEq {
 
   /** Null-tolerant (null → ""), called from codegen and interpreted eval. */
   def eval(l: UTF8String, r: UTF8String, tol: Double,
-      truncating: Boolean): Boolean = {
-    val p = (if (l == null) "" else l.toString).trim.toLowerCase
-    val g = (if (r == null) "" else r.toString).trim.toLowerCase
+      truncating: Boolean): Boolean =
+    eval(if (l == null) "" else l.toString, if (r == null) "" else r.toString,
+      tol, truncating)
+
+  /** Null-tolerant (null → ""), called on the driver. */
+  def eval(l: String, r: String, tol: Double, truncating: Boolean): Boolean = {
+    val p = (if (l == null) "" else l).trim.toLowerCase
+    val g = (if (r == null) "" else r).trim.toLowerCase
     if (p == g) return true
     val np = extract(p)
     val ng = extract(g)

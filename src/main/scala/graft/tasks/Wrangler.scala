@@ -3,8 +3,7 @@ package graft.tasks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.WranglerConfig
-import graft.metrics.Metrics
+import graft.core.{TaskKind, WranglerConfig}
 import graft.transform._
 
 /** The four wrangling pipelines wired end-to-end (SURVEY §3.1), mirroring
@@ -41,16 +40,12 @@ object Wrangler {
     val (trainDf, testDf) = graft.sample.Samplers.positionalSplit(data, orderCol, cfg.k)
     val train = trainDf.select("text", "label_str").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
-    val progs = Validation.trialLoop(RuleSynthesizer, instruction, train,
+    val trials = Validation.trialLoop(RuleSynthesizer, instruction, train,
       Seq.empty, cfg)
-    val best = progs.maxBy(_._2)._1
-    (best, applyProgram(testDf, best))
+    val prog = WranglerMain.selectPrograms(
+      TaskKind.DataTransformation, trials, 1).head
+    (prog, applyProgram(testDf, prog))
   }
-
-  /** Metrics over an applied pipeline output (pred vs label_str). */
-  def evaluate(applied: DataFrame, cfg: WranglerConfig = WranglerConfig.default): DataFrame =
-    Metrics.confusionMetrics(applied, "pred", "label_str", cfg.tolerance,
-      cfg.truncatingZip)
 
   // ---------------------------------------------------------------------
   // Entity matching (J3): pair-level similarity predicates — the programs

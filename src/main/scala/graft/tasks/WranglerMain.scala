@@ -20,13 +20,6 @@ import graft.transform._
   */
 object WranglerMain {
 
-  final case class TaskInput(
-      name: String,
-      kind: TaskKind,
-      data: DataFrame,          // canonical (text, label_str) + orderCol
-      orderCol: String,
-      instruction: Option[String])
-
   /** Pre-split task: the shape the benchmark readers produce when train
     * and test arrive as separate files/directories (EM, imputation,
     * error-detection) or after the reader's own positional split
@@ -70,22 +63,12 @@ object WranglerMain {
     }.toMap
   }
 
-  /** One task end-to-end. Empty test split → skipped (P11 guard,
-    * `run_wrangler.py:172-174`).
-    */
-  def runTask(input: TaskInput,
-      cfg: WranglerConfig = WranglerConfig.default): Option[TaskResult] = {
-    val (trainDf, testDf) =
-      graft.sample.Samplers.positionalSplit(input.data, input.orderCol, cfg.k)
-    runTaskSplit(input.name, input.kind, trainDf, testDf,
-      input.instruction, cfg)
-  }
-
-  /** Pre-split variant: the error-detection task family arrives as SEPARATE
-    * train/test split directories (`data_utils.py:288-305`), not a
-    * positional split of one frame — this is its entry point (paired with
-    * `Readers.errorDetectionDir` + `Samplers.coSort3` for the triple
-    * alignment).
+  /** One task end-to-end over its train and test frames. Empty test split
+    * → skipped (P11 guard, `run_wrangler.py:172-174`). The error-detection
+    * family arrives as SEPARATE train/test split directories
+    * (`data_utils.py:288-305`, read by `Readers.errorDetectionDir` +
+    * `Samplers.coSort3` for the triple alignment); the transformation pair
+    * files arrive positionally split by their reader.
     */
   def runTaskSplit(
       name: String,
@@ -121,19 +104,9 @@ object WranglerMain {
     Some(TaskResult(name, prog, applied, m))
   }
 
-  /** All tasks + global metrics + sinks. Returns per-task results and the
-    * global metric map that lands in metrics.json.
-    */
-  def runAll(
-      spark: SparkSession,
-      inputs: Seq[TaskInput],
-      outDir: String,
-      cfg: WranglerConfig = WranglerConfig.default)
-      : (Seq[TaskResult], Map[String, Double]) =
-    finishRun(inputs.flatMap(runTask(_, cfg)), outDir, cfg)
-
-  /** [[runAll]] over pre-split tasks — the CLI entry path, where every
-    * benchmark layout has already produced (train, test) frames.
+  /** All tasks + global metrics + sinks — the CLI entry path, where every
+    * benchmark layout has already produced (train, test) frames. Returns
+    * per-task results and the global metric map that lands in metrics.json.
     */
   def runAllSplits(
       spark: SparkSession,
@@ -141,18 +114,10 @@ object WranglerMain {
       outDir: String,
       cfg: WranglerConfig = WranglerConfig.default,
       synthFor: TaskKind => FunctionSynthesizer = _ => RuleSynthesizer)
-      : (Seq[TaskResult], Map[String, Double]) =
-    finishRun(
-      inputs.flatMap(i =>
-        runTaskSplit(i.name, i.kind, i.train, i.test, i.instruction, cfg,
-          synthFor(i.kind))),
-      outDir, cfg)
-
-  private def finishRun(
-      results: Seq[TaskResult],
-      outDir: String,
-      cfg: WranglerConfig)
       : (Seq[TaskResult], Map[String, Double]) = {
+    val results = inputs.flatMap(i =>
+      runTaskSplit(i.name, i.kind, i.train, i.test, i.instruction, cfg,
+        synthFor(i.kind)))
     // all-rows global metrics (run_wrangler.py:257-261): union of applied
     val global = results.map(_.applied.select("pred", "label_str"))
       .reduceOption(_ unionByName _)

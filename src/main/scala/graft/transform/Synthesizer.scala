@@ -1,54 +1,9 @@
 package graft.transform
 
+import scala.util.control.NonFatal
+
 import graft.core.WranglerConfig
-
-/** Driver-side tolerant-equality + metrics mirror of graft.metrics.Metrics,
-  * for validating candidate programs on k≈3 demo rows without a Spark job
-  * (reference: `function_generator.py:138-160` + `utils/utils.py:83-128`).
-  * Uses the same sign-dropping regex / truncating-zip semantics.
-  */
-object LocalEval {
-  private val numRe =
-    java.util.regex.Pattern.compile("[-+]?([0-9]*\\.?[0-9]+|[0-9]+/[0-9]+)")
-
-  def extractNumbers(s: String): Seq[Double] = {
-    val m = numRe.matcher(s)
-    val out = scala.collection.mutable.ArrayBuffer[Double]()
-    while (m.find()) {
-      val g = m.group(1)
-      out += (if (g.contains("/")) {
-        val Array(a, b) = g.split("/").map(_.toDouble); a / b
-      } else g.toDouble)
-    }
-    out.toSeq
-  }
-
-  def normalize(s: String): String =
-    Option(s).getOrElse("").trim.toLowerCase
-
-  def tolerantEquals(pred: String, gold: String, tol: Double = 0.021): Boolean = {
-    val p = normalize(pred); val g = normalize(gold)
-    if (p == g) true
-    else {
-      val np = extractNumbers(p); val ng = extractNumbers(g)
-      np.nonEmpty && ng.nonEmpty &&
-        np.zip(ng).forall { case (a, b) => math.abs(a - b) <= tol }
-    }
-  }
-
-  /** Accuracy of a program over (input, gold) pairs; execution errors count
-    * as the "Not excutable" sentinel (F2).
-    */
-  def accuracy(prog: TransformProgram, demos: Seq[(String, String)],
-      tol: Double = 0.021): Double = {
-    if (demos.isEmpty) return 0.0
-    val ok = demos.count { case (in, gold) =>
-      val pred = try prog.eval(in) catch { case _: Throwable => "Not excutable" }
-      tolerantEquals(pred, gold, tol)
-    }
-    ok.toDouble / demos.size
-  }
-}
+import graft.metrics.TolerantEq
 
 /** V2 (SURVEY §2.6) re-expressed: the reference calls an LLM to emit Python
   * source; the rebuild's `FunctionSynthesizer` is a trait so an LLM-backed
@@ -133,7 +88,7 @@ object RuleSynthesizer extends FunctionSynthesizer {
 
     val affineCands: Seq[TransformProgram] = {
       val pairs = demos.map { case (i, o) =>
-        (LocalEval.extractNumbers(i).headOption, LocalEval.extractNumbers(o).headOption)
+        (TolerantEq.extract(i).headOption, TolerantEq.extract(o).headOption)
       }
       if (pairs.forall(p => p._1.nonEmpty && p._2.nonEmpty)) {
         val xs = pairs.map(_._1.get); val ys = pairs.map(_._2.get)
@@ -206,7 +161,7 @@ object RuleSynthesizer extends FunctionSynthesizer {
           val b = LocalDateTime.parse(o0, fo)
           val mins = java.time.Duration.between(a, b).toMinutes.toInt
           if (mins != 0) Some(FixedZoneShift(inF, outF, mins)) else None
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       } yield p).filter(fits)
     }
 
@@ -258,13 +213,28 @@ object Validation {
     val executable =
       try { prog.eval(demos.head._1); true } catch { case _: Throwable => false }
     if (!executable) return (NotExecutable, 0.0)
-    val acc = LocalEval.accuracy(prog, demos, cfg.tolerance)
+    val acc = accuracy(prog, demos, cfg)
     if (acc < cfg.threshold) return (NotFit, acc)
     if (supervision.nonEmpty) {
-      val accSup = LocalEval.accuracy(prog, supervision, cfg.tolerance)
+      val accSup = accuracy(prog, supervision, cfg)
       if (accSup < cfg.thresholdSup) return (NotGeneralizable, acc)
     }
     (Validated, acc)
+  }
+
+  /** Accuracy of a program over (input, gold) pairs under the metric's own
+    * tolerant equality and zip mode (`function_generator.py:138-160`), so
+    * validation and the task metric agree on what counts as correct; an
+    * execution error counts as the "Not excutable" sentinel (F2).
+    */
+  private def accuracy(prog: TransformProgram, pairs: Seq[(String, String)],
+      cfg: WranglerConfig): Double = {
+    if (pairs.isEmpty) return 0.0
+    val ok = pairs.count { case (in, gold) =>
+      val pred = try prog.eval(in) catch { case _: Throwable => "Not excutable" }
+      TolerantEq.eval(pred, gold, cfg.tolerance, cfg.truncatingZip)
+    }
+    ok.toDouble / pairs.size
   }
 
   /** V4 — generate→validate→repair (`generate_function_pipeline`,

@@ -172,23 +172,24 @@ object ProgramDsl {
       case "surround" :: p :: s :: Nil  => Surround(p, s)
       case "strip_affix" :: p :: s :: Nil => StripAffix(p, s)
       case "split" :: sep :: i :: Nil =>
-        SplitIndex(sep, try i.toInt catch { case _: Throwable => bad() })
+        SplitIndex(sep, i.toIntOption.getOrElse(bad()))
       case "regex_replace" :: p :: r :: Nil => RegexReplace(p, r)
       case "regex_extract" :: p :: g :: Nil =>
-        RegexExtract(p, try g.toInt catch { case _: Throwable => bad() })
+        RegexExtract(p, g.toIntOption.getOrElse(bad()))
       case "date" :: i :: o :: Nil => DateReformat(i, o)
       case "hijri" :: f :: Nil => GregorianToHijri(f)
       case "deg_to_dms" :: d :: Nil =>
-        DegToDms(try d.toInt catch { case _: Throwable => bad() })
+        DegToDms(d.toIntOption.getOrElse(bad()))
       case "dms_to_deg" :: d :: Nil =>
-        DmsToDeg(try d.toInt catch { case _: Throwable => bad() })
+        DmsToDeg(d.toIntOption.getOrElse(bad()))
       case "haversine_km" :: d :: Nil =>
-        HaversineKm(try d.toInt catch { case _: Throwable => bad() })
+        HaversineKm(d.toIntOption.getOrElse(bad()))
       case "tz_shift" :: i :: o :: m :: Nil =>
-        FixedZoneShift(i, o, try m.toInt catch { case _: Throwable => bad() })
+        FixedZoneShift(i, o, m.toIntOption.getOrElse(bad()))
       case "affine" :: f :: o :: d :: t :: Nil =>
-        try AffineNumber(f.toDouble, o.toDouble, d.toInt, t.toBoolean)
-        catch { case _: Throwable => bad() }
+        AffineNumber(f.toDoubleOption.getOrElse(bad()),
+          o.toDoubleOption.getOrElse(bad()), d.toIntOption.getOrElse(bad()),
+          t.toBooleanOption.getOrElse(bad()))
       case "dict" :: dflt :: kvs if kvs.length % 2 == 0 =>
         DictLookup(kvs.grouped(2).map { case List(k, v) => k -> v }.toMap,
           if (dflt == "\u0000") None else Some(dflt))

@@ -35,22 +35,6 @@ class MetricsSpec extends SparkSpec {
     assert(te("3/8", "3/8") && !te("3/8", "2/8"))
   }
 
-  test("corrected mode evaluates fractions for real") {
-    def tec(p: String, g: String): Boolean = {
-      import org.apache.spark.sql.Column
-      val eq = (a: Column, b: Column) => {
-        val na = Metrics.extractNumbersCorrected(Metrics.normalize(a))
-        val nb = Metrics.extractNumbersCorrected(Metrics.normalize(b))
-        size(na) > 0 && size(nb) > 0 && Metrics.withinTolerance(na, nb)
-      }
-      Seq((p, g)).toDF("p", "g").select(eq(col("p"), col("g")).as("r"))
-        .as[Boolean].head()
-    }
-    assert(tec("1/2", "0.5"))
-    assert(tec("1/3", "0.34"))          // |0.333..-0.34| < 0.021
-    assert(!tec("1/2", "0.6"))
-  }
-
   test("sign is dropped by the reference regex (findall group semantics)") {
     // "-3.14" extracts 3.14 — faithful to utils.py:49 findall with group
     assert(te("-3.14", "3.14"))
@@ -118,15 +102,25 @@ class MetricsSpec extends SparkSpec {
     val rows = Seq(
       ("yes", "yes"), ("no", "yes"), ("no", "no"), ("yes", "no"),
       ("yes", "yes"), ("no", "no"), ("no", "no"), ("yes", "yes"))
-    val df = rows.toDF("pred", "gold")
-    val classes = df.groupBy($"pred", $"gold").agg(count(lit(1)).as("__w"))
-    val a = Metrics.confusionMetrics(df, "pred", "gold").collect()(0)
-    val b = Metrics
-      .confusionMetricsWeighted(classes, "pred", "gold", "__w").collect()(0)
-    assert(a.schema.fieldNames.toSeq === b.schema.fieldNames.toSeq)
+    def both(df: org.apache.spark.sql.DataFrame) = {
+      val classes = df.groupBy($"pred", $"gold").agg(count(lit(1)).as("__w"))
+      val a = Metrics.confusionMetrics(df, "pred", "gold")
+      val b = Metrics.confusionMetricsWeighted(classes, "pred", "gold", "__w")
+      assert(a.schema.fieldNames.toSeq === b.schema.fieldNames.toSeq)
+      (a.collect()(0), b.collect()(0))
+    }
+    val (a, b) = both(rows.toDF("pred", "gold"))
     a.schema.fieldNames.foreach { f =>
       assert(a.getAs[Any](f) === b.getAs[Any](f), s"field $f diverges")
     }
+    // empty input: the row-level total is a count (0), the weighted one a
+    // sum (NULL); every other field agrees
+    val (ea, eb) = both(Seq.empty[(String, String)].toDF("pred", "gold"))
+    assert(ea.getAs[Long]("total") === 0L && eb.isNullAt(0))
+    ea.schema.fieldNames.filter(_ != "total").foreach { f =>
+      assert(ea.getAs[Any](f) === eb.getAs[Any](f), s"empty: field $f diverges")
+    }
+    assert(ea.getAs[Any]("crc") === null && ea.getAs[Double]("f1") === 0.0)
   }
 
   test("legacy F1 deflates when prec+rec < 1 (utils.py:127 quirk)") {

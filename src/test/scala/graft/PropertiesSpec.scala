@@ -1,17 +1,18 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
-import graft.metrics.{MetricsAggregator, TolerantEq}
-import graft.transform.{LocalEval, TransformProgram}
+import graft.core.WranglerConfig
+import graft.metrics.{Metrics, TolerantEq}
+import graft.transform.{TransformProgram, Validation}
 
 /** Property-based invariants (SURVEY §5.2): tolerant-equality algebra,
   * serialization round-trips, metric bounds — driver-side via the same
-  * evaluators the engine compiles into expressions (TolerantEq backs the
-  * codegen'd TolerantEqualsExpr; LocalEval backs validation).
+  * evaluator the engine compiles into expressions (TolerantEq backs both
+  * the codegen'd TolerantEqualsExpr and validation).
   */
-class PropertiesSpec extends AnyFunSuite {
+class PropertiesSpec extends SparkSpec {
+  import spark.implicits._
 
   /** Raw-scalacheck sampling (no scalatestplus bridge in the offline cache):
     * draw n samples from the generator and assert the property on each.
@@ -105,25 +106,30 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   test("metric counts are bounded and consistent") {
+    // one Spark job per case: few cases keep the spec fast
     val label = Gen.oneOf("yes", "no", "maybe")
-    forAll(Gen.listOf(Gen.zip(label, label))) { pairs =>
-      val agg = MetricsAggregator()
-      val counts = pairs.foldLeft(agg.zero)((b, p) => agg.reduce(b, p))
-      val r = agg.finish(counts)
-      assert(r.total === pairs.length)
-      assert(r.tp + r.fn + r.tn + r.fp <= r.total)
-      assert(r.crc <= r.total)
-      assert(r.acc >= 0.0 && r.acc <= 1.0)
-      assert(r.prec >= 0.0 && r.prec <= 1.0 && r.rec >= 0.0 && r.rec <= 1.0)
-      assert(r.f1Legacy <= r.f1 + 1e-12)   // legacy only ever deflates
+    forAll(Gen.nonEmptyListOf(Gen.zip(label, label)), 12) { pairs =>
+      val r = Metrics.confusionMetrics(pairs.toDF("pred", "gold"),
+        "pred", "gold").collect()(0)
+      val n = Seq("total", "crc", "tp", "fn", "tn", "fp")
+        .map(f => f -> r.getAs[Long](f)).toMap
+      val d = Seq("prec", "rec", "acc", "f1_legacy", "f1")
+        .map(f => f -> r.getAs[Double](f)).toMap
+      assert(n("total") === pairs.length)
+      assert(n("tp") + n("fn") + n("tn") + n("fp") <= n("total"))
+      assert(n("crc") <= n("total"))
+      assert(d("acc") >= 0.0 && d("acc") <= 1.0)
+      assert(d("prec") >= 0.0 && d("prec") <= 1.0 &&
+        d("rec") >= 0.0 && d("rec") <= 1.0)
+      assert(d("f1_legacy") <= d("f1") + 1e-12)   // legacy only ever deflates
     }
   }
 
-  test("LocalEval accuracy agrees with TolerantEq on identity programs") {
-    forAll(Gen.listOf(anyString)) { inputs =>
+  test("Validation accuracy agrees with TolerantEq on identity programs") {
+    forAll(Gen.nonEmptyListOf(anyString)) { inputs =>
       val demos = inputs.map(s => (s, s))
-      if (demos.nonEmpty)
-        assert(LocalEval.accuracy(TransformProgram.Identity, demos) === 1.0)
+      assert(Validation.validate(TransformProgram.Identity, demos, Seq.empty,
+        WranglerConfig.default) === (Validation.Validated, 1.0))
     }
   }
 

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.io.Sinks
-import graft.metrics.{Metrics, MetricsAggregator}
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -29,22 +28,5 @@ class SinksSpec extends SparkSpec {
     val p = dir.resolve("preds").toString
     Sinks.writePredictions(Seq(("a", "b")).toDF("text", "pred"), p)
     assert(spark.read.parquet(p).count() === 1)
-  }
-
-  test("typed MetricsAggregator agrees with confusionMetrics") {
-    val pairs = Seq(
-      ("yes", "yes"), ("no", "yes"), ("no", "no"), ("yes", "no"),
-      ("3.14", "3.15"), ("x", "y"))
-    val typed = pairs.toDS().select(MetricsAggregator().toColumn).head()
-    val cols = Metrics.confusionMetrics(
-      pairs.toDF("pred", "gold"), "pred", "gold").collect()(0)
-    assert(typed.total === cols.getAs[Long]("total"))
-    assert(typed.crc === cols.getAs[Long]("crc"))
-    assert(typed.tp === cols.getAs[Long]("tp"))
-    assert(typed.fn === cols.getAs[Long]("fn"))
-    assert(typed.tn === cols.getAs[Long]("tn"))
-    assert(typed.fp === cols.getAs[Long]("fp"))
-    assert(typed.f1Legacy === cols.getAs[Double]("f1_legacy"))
-    assert(typed.f1 === cols.getAs[Double]("f1"))
   }
 }

@@ -294,6 +294,18 @@ class TransformSpec extends SparkSpec {
       Validation.Validated)
   }
 
+  test("validation scores with the configured zip mode") {
+    // the program appends a number the gold lacks: the truncating zip
+    // compares only the first, the equal-length mode counts it a miss
+    val demos = Seq("1.5" -> "1.5", "2.25" -> "2.25")
+    val extra = Surround("", " kg 2")
+    val cfg = WranglerConfig.default
+    assert(Validation.validate(extra, demos, Seq.empty, cfg) ===
+      (Validation.Validated, 1.0))
+    assert(Validation.validate(extra, demos, Seq.empty,
+      cfg.copy(truncatingZip = false)) === (Validation.NotFit, 0.0))
+  }
+
   test("trialLoop returns the null program when nothing fits") {
     val cfg = WranglerConfig.default.copy(k = 2)
     val impossible = Seq("a" -> "xyzzy1", "a" -> "xyzzy2")  // contradictory
@@ -307,7 +319,8 @@ class TransformSpec extends SparkSpec {
     val (prog, applied) = graft.tasks.Wrangler.runTransformation(
       data, "ord", None, WranglerConfig.default)
     assert(prog == UpperCase)
-    val m = graft.tasks.Wrangler.evaluate(applied).collect()(0)
+    val m = graft.metrics.Metrics.confusionMetrics(
+      applied, "pred", "label_str").collect()(0)
     assert(m.getAs[Double]("acc") == 1.0)
   }
 
@@ -445,7 +458,13 @@ class TransformSpec extends SparkSpec {
       assert(ProgramDsl.parse(ProgramDsl.render(p)) === p,
         s"round trip failed for ${p.describe}")
     }
-    intercept[IllegalArgumentException](ProgramDsl.parse("def f(x): ..."))
+    // not the DSL; a non-integer index; non-numeric and non-boolean args
+    Seq("def f(x): ...", "split\t,\tone",
+        "affine\t1.8\tthirty-two\t1\ttrue",
+        "affine\t1.8\t32.0\t1\tyes").foreach { line =>
+      val e = intercept[IllegalArgumentException](ProgramDsl.parse(line))
+      assert(e.getMessage === s"unparsable DSL: $line")
+    }
   }
 
   test("TransportSynthesizer retries unparsable responses (ref :202-209)") {
